@@ -123,13 +123,16 @@ object Bench {
     // bench_out_c${cpus}.json is ALWAYS written so the driver's low-core
     // scaling run no longer clobbers the main run's per-query record
     // (r21 lost the 32-core map to the c8 run); bench_out.json remains the
-    // last-full-run compatibility path. SPARK_GRAFT_ONLY subset runs skip
-    // the default paths: a solo-profiling run must not clobber the
-    // committed full-run record (it happened twice in round 14 before this
-    // guard).
-    val outPaths = sys.env.get("SPARK_GRAFT_BENCH_OUT").toSeq ++
-      (if (only.isEmpty) Seq("bench_out.json", s"bench_out_c$cpus.json")
-       else Nil)
+    // last-full-run compatibility path. The default paths are written only
+    // for a full run with no SPARK_GRAFT_BENCH_OUT: neither a
+    // solo-profiling (SPARK_GRAFT_ONLY) run nor a redirected full run (an
+    // A/B leg run from the repo root) may clobber the committed full-run
+    // record.
+    val outPaths = sys.env.get("SPARK_GRAFT_BENCH_OUT") match {
+      case Some(p) => Seq(p)
+      case None if only.isEmpty => Seq("bench_out.json", s"bench_out_c$cpus.json")
+      case None => Nil
+    }
     outPaths.foreach { p =>
       try java.nio.file.Files.write(java.nio.file.Paths.get(p),
         (json + "\n").getBytes("UTF-8"))

@@ -33,8 +33,8 @@ object SparkEntry {
     * share THIS set: the round-13 review found the two hand-maintained
     * copies had drifted 18 queries apart, making the plan audit replay 18
     * streams to assert on nothing. The streaming queries' plan-shape claims
-    * are certified by their batch twins' plans plus StreamProfile; the
-    * union-find's by the DedupClusters scaladoc.
+    * are certified by their batch twins' plans; the union-find's by the
+    * DedupClusters scaladoc.
     */
   val eagerQueries: Set[String] = Set(
     "mqtt_history_streaming_file",
@@ -101,11 +101,10 @@ object SparkEntry {
     "mqtt_topic_filter" -> (MqttQueries.topicFilter _),
     "mqtt_localtime" -> (MqttQueries.localtime _),
     "mqtt_payload_json" -> (MqttQueries.payloadJson _),
-    // the same streaming CDC certified through the built-in FILE stream
-    // source (range-ordered parquet chunks, maxFilesPerTrigger=1): no
-    // driver-side input materialization anywhere on the ingest path, so
-    // the incremental-equals-batch certificate is not capped at driver
-    // memory the way the broker-replay harness is
+    // the streaming CDC certified through the built-in FILE stream source
+    // (range-ordered parquet chunks, maxFilesPerTrigger=1): no driver-side
+    // input materialization anywhere on the ingest path, so the
+    // incremental-equals-batch certificate is not capped at driver memory
     "mqtt_history_streaming_file" -> ((s, d) =>
       streaming.FileReplayHistory.history(s, d)),
     // the SAME file-source replay through Spark 4's transformWithState on
@@ -125,16 +124,12 @@ object SparkEntry {
     // the keyed upsert sink end-to-end (source -> micro-batches -> foreachBatch
     // merge), against the SAME oracle as the batch state table.
     //
-    // This is the ONE remaining broker-replay (driver-collect ingest)
-    // exemplar in the driver set: it alone certifies the DSv2 MqttSource
-    // read path (S1: pattern pushdown, ReadLimit chunking) composed with
-    // the UpsertSink merge (S3) end-to-end. The other 13 broker-replay
-    // twins were demoted in round 15 — their certification value is
-    // duplicated by the `*_file`/`*_tws` forms (same oracles, distributed
-    // ingest), they were the noisiest ~18% of bench (driver-collect
-    // ingest swings with machine load), and every demoted harness stays
-    // exercised by its spec (StreamingHistorySpec, StreamingDedupSpec,
-    // StreamingCmsSpec, ...).
+    // This is the ONE broker-replay (driver-collect ingest) exemplar: it
+    // alone certifies the DSv2 MqttSource read path (S1: pattern
+    // pushdown, ReadLimit chunking) composed with the UpsertSink merge
+    // (S3) end-to-end. Every other streaming operator ingests through the
+    // distributed file replay (ReplayHarness) — the `*_file`/`*_tws`
+    // forms, whose specs also carry the multi-chunking certificates.
     "mqtt_state_streaming" -> ((s, d) => streaming.StreamingState.state(s, d)),
     // the same keyed upsert certified through the built-in FILE stream
     // source: distributed range-ordered staging, one real micro-batch per
@@ -308,11 +303,11 @@ object SparkEntry {
       streaming.StreamStreamJoin.signupPurchases(s, d, chunks = 2)),
     // stream-static join: each micro-batch enriched against a broadcast
     // dim inside the streaming plan (stateless; the production fact x dim
-    // shape), against the plain batch join+aggregate oracle
+    // shape), against the plain batch join+aggregate oracle. The two
+    // entries replay at 5 and 3 chunks, so together they certify
+    // batch-count invariance against the SAME oracle
     "q_stream_static_join" -> ((s, d) =>
-      streaming.StreamStaticJoin.segmentActivity(s, d)),
-    // the same broadcast enrichment over distributed file-source
-    // micro-batches (no driver-side input materialization); SAME oracle
+      streaming.StreamStaticJoin.segmentActivityFromFiles(s, d, chunks = 5)),
     "q_stream_static_join_file" -> ((s, d) =>
       streaming.StreamStaticJoin.segmentActivityFromFiles(s, d)),
     // the LEFT-OUTER form: unmatched rows can only emit at watermark-driven

@@ -708,7 +708,7 @@ object DedupSql {
 
   /** [[exactSql]] restricted to the key column — the oracle for the
     * streaming horizon-scoped twin, whose certified surface is the
-    * survivor KEY SET (see StreamingDedup.exactWithinHorizon).
+    * survivor KEY SET (see StreamingDedup.exactWithinHorizonFromFiles).
     */
   val exactKeySetSql: String =
     """SELECT DISTINCT md5(trim(text)) AS content_hash
@@ -737,7 +737,8 @@ object DedupSql {
 
   /** [[normalizedDupsSql]] restricted to the key column — the oracle for
     * the streaming canonical-dedup twin, whose certified surface is the
-    * survivor KEY SET (see StreamingDedup.normalizedWithinHorizon).
+    * survivor KEY SET (see
+    * StreamingDedup.normalizedWithinHorizonFromFiles).
     */
   val normalizedKeySetSql: String = {
     val collapsed = "trim(regexp_replace(regexp_replace(" +

@@ -131,7 +131,7 @@ object HeavyHitters {
     rankCounts(df.groupBy(col(keyCol)).agg(count(lit(1)).as("n_rows")), keyCol, topN)
 
   /** The ranking/share tail over already-aggregated (key, n_rows) counts —
-    * shared with the streaming twin ([[graft.streaming.StreamingHeavyHitters]]),
+    * shared with the streaming twin ([[graft.streaming.FileReplayHeavyHitters]]),
     * whose state IS these counters maintained incrementally. Runs on
     * key-cardinality rows only.
     */

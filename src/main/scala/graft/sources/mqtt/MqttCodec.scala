@@ -51,22 +51,23 @@ object MqttCodec {
   }
 
   /** Blocking read of one whole packet; EOFException on orderly peer close
-    * (the CONN_LOST signal the transport's reader consumes).
+    * (the CONN_LOST signal the transport's reader consumes) and on a packet
+    * truncated mid-header or mid-body; IOException on a remaining length
+    * longer than the 4 bytes §2.2.3 allows.
     */
   def readPacket(in: InputStream): Packet = {
     val first = in.read()
     if (first < 0) throw new EOFException("MQTT stream closed")
-    var mult = 1
     var len = 0
-    var b = 0
+    var nBytes = 0
     var continue = true
     while (continue) {
-      b = in.read()
+      // a 4th byte with its continuation bit set announces a 5th
+      if (nBytes == 4) throw new java.io.IOException("malformed remaining length")
+      val b = in.read()
       if (b < 0) throw new EOFException("MQTT stream closed mid-header")
-      len += (b & 0x7F) * mult
-      mult *= 128
-      if (mult > 128 * 128 * 128 * 128)
-        throw new java.io.IOException("malformed remaining length")
+      len |= (b & 0x7F) << (7 * nBytes)
+      nBytes += 1
       continue = (b & 0x80) != 0
     }
     val body = new Array[Byte](len)

@@ -2,18 +2,23 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.HeavyHitters
 import graft.sources.Tables
 
-/** The UPDATE-MODE aggregation family's streaming certificate WITHOUT
-  * driver-side input materialization — the file-source twin of
-  * [[StreamingHeavyHitters.hotCustomers]], whose MemoryStream ingest
-  * `.collect()`s the orders table to the driver. Here the keyed fact rows
-  * are staged DISTRIBUTED via [[FileStage]] and consumed as real
-  * micro-batches (`maxFilesPerTrigger = 1`), so the per-key counters are
-  * maintained by genuine incremental state updates over partitioned input.
+/** Streaming twin of [[HeavyHitters.topKeys]], the UPDATE-MODE
+  * aggregation family's certificate: per-key counters maintained
+  * incrementally as a plain update-mode streaming `groupBy(key).count()`.
+  * The keyed fact rows are staged DISTRIBUTED by
+  * [[ReplayHarness.emissionsFromFiles]] and consumed as real micro-batches
+  * (`maxFilesPerTrigger = 1`), so the counters are maintained by genuine
+  * incremental state updates over partitioned input.
+  *
+  * Scale: state is one counter per DISTINCT key — exact heavy-hitters is
+  * keyspace-bounded by nature (the batch form's shuffle carries the same
+  * cardinality). [[StreamingBoundedHeavyHitters]] is the bounded-state
+  * form for a key universe that overwhelms memory, at the cost of
+  * approximation outside its exact regime.
   *
   * Update mode needs none of the append-mode machinery: no watermark, no
   * flush sentinels, no event-time ordering constraint — counters emit
@@ -32,35 +37,16 @@ import graft.sources.Tables
 object FileReplayHeavyHitters {
 
   def hotCustomers(spark: SparkSession, dir: String, chunks: Int = 3): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_file_hh").toFile
-    try {
-      val inDir = new java.io.File(work, "in").getAbsolutePath
-      val staged = Tables.orders(spark, dir)
-        .select(col("o_orderkey"), col("o_custkey"))
-      FileStage.stage(staged, inDir, chunks, col("o_orderkey"))
-      val name = s"hh_file_${java.util.UUID.randomUUID().toString.take(8)}"
-      try {
-        val q = ReplayHarness.runWithStatePartitions(spark, 8) {
-          val stream = spark.readStream
-            .schema(staged.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(inDir)
-          stream.groupBy(col("o_custkey")).count()
-            .writeStream.format("memory").queryName(name)
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        }
-        try q.awaitTermination() finally q.stop()
-        val emissions = spark.table(name)
-        val materialized = spark.createDataFrame(
-          java.util.Arrays.asList(emissions.collect(): _*), emissions.schema)
-        // cumulative counts are monotone: the final counter is the row max
-        val counts = materialized
-          .groupBy(col("o_custkey"))
-          .agg(max(col("count")).as("n_rows"))
-        HeavyHitters.rankCounts(counts, "o_custkey", 10)
-      } finally {
-        try spark.catalog.dropTempView(name) catch { case _: Exception => () }
-      }
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(work)
+    val staged = Tables.orders(spark, dir)
+      .select(col("o_orderkey"), col("o_custkey"))
+    val emissions = ReplayHarness.emissionsFromFiles(
+      spark, staged, chunks, statePartitions = 8, prefix = "hh_file",
+      outputMode = "update", col("o_orderkey"))(
+      _.groupBy(col("o_custkey")).count())
+    // cumulative counts are monotone: the final counter is the row max
+    val counts = emissions
+      .groupBy(col("o_custkey"))
+      .agg(max(col("count")).as("n_rows"))
+    HeavyHitters.rankCounts(counts, "o_custkey", 10)
   }
 }

@@ -6,15 +6,16 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.MqttQueries
 
-/** The streaming CDC certification WITHOUT driver-side input
-  * materialization: [[StreamingHistory]] proves incremental-equals-batch
-  * through the DSv2 MQTT source, but its ingest seam ([[Replay.publish]])
-  * `.collect()`s the whole replay frame to the driver — the operators scale,
-  * the harness caps the certificate at driver memory. This path removes
-  * that cap: the replay frame is written DISTRIBUTED as `chunks` parquet
-  * files in (ts, msg_id) range order, then consumed by the built-in file
-  * stream source under `maxFilesPerTrigger = 1`, so each file becomes a
-  * REAL micro-batch and no input row ever visits the driver.
+/** The reference's defining path — streaming ingestion feeding trigger CDC
+  * (the mqtt2sql.py message callback -> the mysql.sql trigger cascade) —
+  * executed END-TO-END through Structured Streaming and exposed
+  * as a driver-checkable query: per-topic state is carried across REAL
+  * micro-batches by [[StatefulCdc.changes]] (or [[TwsCdc.changes]]), then
+  * the emitted CDC events get the same id assignment + topic-dimension
+  * join as the batch form. The replay frame is written DISTRIBUTED as
+  * `chunks` parquet files in (ts, msg_id) range order, then consumed by the
+  * built-in file stream source under `maxFilesPerTrigger = 1`, so each file
+  * becomes one micro-batch and no input row ever visits the driver.
   *
   * Ordering contract: the CDC diff and the id assignment depend on the
   * (ts, msg_id) total order, so micro-batch boundaries must respect it —
@@ -24,9 +25,9 @@ import graft.operators.MqttQueries
   * file source schedules oldest-timestamp-first (the one piece of file
   * METADATA the driver touches; never data).
   *
-  * Oracle: [[MqttQueries.historySql]] — the SAME SQL as the batch and
-  * broker-replay forms, so a green row certifies incremental-equals-batch
-  * at any scale the cluster (not the driver) can hold.
+  * Oracle: [[MqttQueries.historySql]] — the SAME SQL as the batch
+  * `lag`-window form, so a green row certifies incremental-equals-batch
+  * (SURVEY §5.2d) at any scale the cluster (not the driver) can hold.
   */
 object FileReplayHistory {
 
@@ -79,7 +80,7 @@ object FileReplayHistory {
       val kept = ReplayHarness.pinnedParquet(spark, schema, outDir)
         .withColumn("ts", col("ts").cast("timestamp_ntz"))
         .select(col("ts"), col("topic"), col("value"), col("msg_id"))
-      // the SAME post-processing as the batch and broker-replay forms
+      // the SAME post-processing as the batch form
       MqttQueries.finishHistory(kept, m)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(work)
   }

@@ -8,14 +8,15 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Tables
 
-/** The MERGING-window streaming certificate (sessionization) WITHOUT
-  * driver-side input materialization: [[StreamingSessions.userSessions]]
-  * proves incremental-equals-batch for `session_window`, but its ingest
-  * seam `.collect()`s the whole events table into a MemoryStream — the
-  * operator scales, the certificate caps at driver memory. This path
-  * stages the events DISTRIBUTED via [[FileStage]] (range-ordered parquet
-  * chunks, one REAL micro-batch per file under `maxFilesPerTrigger = 1`),
-  * so the certificate holds at any scale the cluster can write.
+/** The MERGING-window streaming certificate (sessionization): the events
+  * table replayed through [[StreamingSessions.sessions]] proves
+  * incremental-equals-batch for `session_window` (gap-based sessionization
+  * is a pure event-time function, so the equality is exact). The events
+  * are staged DISTRIBUTED via [[FileStage]] (range-ordered parquet chunks,
+  * one REAL micro-batch per file under `maxFilesPerTrigger = 1`), in
+  * event-time order so the watermark advances monotonically and earlier
+  * sessions finalize while later chunks are still streaming; the
+  * certificate holds at any scale the cluster can write.
   *
   * Append-mode sessionization only emits a session once the watermark
   * passes its end (last event + gap); a bounded replay would strand every

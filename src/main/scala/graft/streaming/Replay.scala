@@ -7,13 +7,13 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.mqtt.MqttBroker
 
-/** The shared ingest seam of the end-to-end streaming queries: publish a
-  * replay message frame into a fresh [[MqttBroker]] buffer in arrival order
-  * ((ts, msg_id) — the batch pipelines' total order), so buffer positions
-  * become this run's msg_ids and every downstream tiebreak agrees with the
-  * batch oracle. ONE implementation, used by both [[StreamingHistory]] and
-  * [[StreamingState]] — the streaming/batch parity the oracles certify
-  * depends on these staying identical.
+/** The broker-replay seam of the DSv2 exemplar [[StreamingState]]: publish
+  * a replay message frame into a fresh [[MqttBroker]] buffer in arrival
+  * order ((ts, msg_id) — the batch pipelines' total order), so buffer
+  * positions become this run's msg_ids and every downstream tiebreak agrees
+  * with the batch oracle. The driver iterates the whole frame, so this seam
+  * is for that one exemplar; every other streaming operator ingests through
+  * [[ReplayHarness]]'s distributed file replay.
   */
 private[streaming] object Replay {
 

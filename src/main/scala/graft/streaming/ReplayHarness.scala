@@ -1,44 +1,24 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The shared replay harness of the update-mode aggregation twins
-  * ([[StreamingSketch]], [[StreamingQuantiles]], [[StreamingHeavyHitters]],
-  * [[StreamingCleanCorpus]]): stream `rows` through `agg` in `chunks`
-  * micro-batches via a MemoryStream and an update-mode memory sink, and
-  * return EVERY emitted row. One implementation owns the shared mechanics —
-  * unique sink naming, state-store partition sizing with conf restore (the
-  * StreamingHistory rule: size the stateful shuffle to the keyspace, not
-  * the session default), stream stop and temp-view cleanup on all paths —
-  * so a fix applies once, not four times.
+/** The ingest seam of the streaming operators. Each operator is a
+  * `DataFrame => DataFrame` stateful fold; this harness feeds it a replay
+  * frame staged DISTRIBUTED via [[FileStage]] (range-ordered parquet
+  * chunks, consumed under `maxFilesPerTrigger = 1`, so each chunk is one
+  * REAL micro-batch and no input row visits the driver). One implementation
+  * owns the shared mechanics — state-store partition sizing with conf
+  * restore, unique sink naming, stream stop, temp-dir and temp-view cleanup
+  * on all paths — so a fix applies once.
   *
-  * Callers fold the emissions to the final state: update-mode aggregates
-  * here are MONOTONE (counts nondecreasing, min nonincreasing), so the
-  * final value per key is the row max/min — batch-order-independent.
+  * Update-mode callers fold the emissions to the final state: the
+  * aggregates here are MONOTONE (counts nondecreasing, min nonincreasing),
+  * so the final value per key is the row max/min — batch-order-independent.
+  * The only other seam is [[Replay]], which publishes into the DSv2 MQTT
+  * source for the exemplar [[StreamingState]].
   */
 private[streaming] object ReplayHarness {
 
-  /** Start a streaming query with `spark.sql.shuffle.partitions` set to
-    * `statePartitions` (the StreamingHistory rule: size the stateful
-    * shuffle — which FREEZES into the checkpoint as the state-store
-    * partition count — to the keyspace, not the session default), restoring
-    * the session value once `start` returns the running query.
-    *
-    * LOAD-BEARING ASSUMPTION, documented here because every file twin rides
-    * on it: `DataStreamWriter.start()` constructs the `StreamExecution`
-    * SYNCHRONOUSLY, and the execution clones the session (and with it the
-    * SQL conf) at construction — so the conf restore in this method's
-    * `finally` cannot race the running stream; the stream keeps the
-    * `statePartitions` value for its whole life while the caller's session
-    * is already back to its default. `StreamingConfCaptureSpec` pins the
-    * behavior against Spark upgrades: if a Spark version ever deferred the
-    * clone past `start()`, that spec (a stream started under an altered
-    * conf, restored immediately, asserting the stream kept the altered
-    * value) is the tripwire. Every start-a-stream-with-sized-state site
-    * must route through here rather than re-implementing the
-    * save/set/restore dance.
-    */
   /** Serializes the conf-set/start/conf-restore dance so INDEPENDENT twins
     * may start their streams from concurrent threads (the r21
     * [[StreamingHybrid]] leg overlap): without the lock, two threads
@@ -60,7 +40,27 @@ private[streaming] object ReplayHarness {
 
   private val NoDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
 
-  /** `noDataBatches = false` additionally starts the stream with
+  /** Start a streaming query with `spark.sql.shuffle.partitions` set to
+    * `statePartitions` (size the stateful shuffle — which FREEZES into the
+    * checkpoint as the state-store partition count — to the keyspace, not
+    * the session default), restoring the session value once `start`
+    * returns the running query.
+    *
+    * LOAD-BEARING ASSUMPTION, documented here because every file twin rides
+    * on it: `DataStreamWriter.start()` constructs the `StreamExecution`
+    * SYNCHRONOUSLY, and the execution clones the session (and with it the
+    * SQL conf) at construction — so the conf restore in this method's
+    * `finally` cannot race the running stream; the stream keeps the
+    * `statePartitions` value for its whole life while the caller's session
+    * is already back to its default. `StreamingConfCaptureSpec` pins the
+    * behavior against Spark upgrades: if a Spark version ever deferred the
+    * clone past `start()`, that spec (a stream started under an altered
+    * conf, restored immediately, asserting the stream kept the altered
+    * value) is the tripwire. Every start-a-stream-with-sized-state site
+    * must route through here rather than re-implementing the
+    * save/set/restore dance.
+    *
+    * `noDataBatches = false` additionally starts the stream with
     * [[NoDataKey]] off (captured by the same clone-at-start contract), so
     * AvailableNow terminates after the LAST data batch instead of running
     * one trailing no-data micro-batch (~0.5-0.7 s of pure state-commit +
@@ -87,10 +87,9 @@ private[streaming] object ReplayHarness {
     }
   }
 
-  /** The driver-free counterpart of [[updateModeEmissions]]: the replay
-    * frame is staged DISTRIBUTED via [[FileStage]] (range-ordered parquet
-    * chunks, one REAL micro-batch per file) instead of collected into a
-    * MemoryStream, so no input row ever visits the driver. Shared by every
+  /** Stream `staged` through `agg` in `chunks` file micro-batches (staged
+    * DISTRIBUTED via [[FileStage]], range-ordered on `order`, one REAL
+    * micro-batch per file) and return every emission. Shared by every
     * `*_streaming_file` twin; `agg` receives the raw file-source frame
     * (callers re-type with `.as[T]` where their agg is typed). Append-mode
     * users (dedup / winnow key sets) emit on ARRIVAL — first-seen rows
@@ -182,6 +181,15 @@ private[streaming] object ReplayHarness {
     * survives deletion of the sink directory without any row visiting the
     * driver. The r22 replacement for corpus-sized memory-sink collects
     * across every file-replay harness.
+    *
+    * LOCAL MODE ONLY: the sink directory is a driver-local temp dir that
+    * the callers delete once this returns, so the cache holds the only
+    * copy. In local mode the executor is the driver JVM and a
+    * MEMORY_AND_DISK partition is never lost while the session lives. On a
+    * cluster the executors cannot see a driver-local dir, and a lost
+    * executor would recompute its cached partitions from the deleted path;
+    * a cluster deployment needs a shared staging path kept for the frame's
+    * lifetime (or a `localCheckpoint` instead of the cache).
     */
   private[streaming] def pinnedParquet(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType, dir: String): DataFrame = {
@@ -189,31 +197,5 @@ private[streaming] object ReplayHarness {
       spark.read.schema(schema).parquet(dir))
     pinned.count() // materialize every partition before the dir dies
     pinned
-  }
-
-  def updateModeEmissions[T](spark: SparkSession, rows: Seq[T], chunks: Int,
-      statePartitions: Int, prefix: String)(agg: Dataset[T] => DataFrame)(
-      implicit enc: Encoder[T]): DataFrame = {
-    implicit val ctx = spark.sqlContext
-    val name = s"${prefix}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val input = MemoryStream[T]
-    val q = runWithStatePartitions(spark, statePartitions) {
-      agg(input.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-    }
-    try {
-      val per = math.max(1, (rows.length + chunks - 1) / chunks)
-      rows.grouped(per).foreach { slice =>
-        input.addData(slice)
-        q.processAllAvailable()
-      }
-      val table = spark.table(name)
-      spark.createDataFrame(
-        java.util.Arrays.asList(table.collect(): _*), table.schema)
-    } finally {
-      q.stop()
-      try spark.catalog.dropTempView(name) catch { case _: Exception => () }
-    }
   }
 }

@@ -5,9 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 
-/** One event entering the enrichment stream. */
-final case class UserEvent(user_id: Long, value_cents: Long)
-
 /** STREAM-STATIC join certificate (§2.7): each micro-batch of the event
   * stream is enriched against a static dimension table inside the
   * streaming plan — the most common production streaming join (fact
@@ -24,25 +21,9 @@ final case class UserEvent(user_id: Long, value_cents: Long)
 object StreamStaticJoin {
 
   /** Driver query: per-market-segment event count and value total,
-    * computed by streaming the events table in `chunks` micro-batches
-    * joined to the static customer dim. The MemoryStream feed is the
-    * single-endpoint ingest seam (the Replay pattern); everything past it
-    * is partitioned streaming execution.
-    */
-  def segmentActivity(spark: SparkSession, dir: String,
-      chunks: Int = 3): DataFrame = {
-    import spark.implicits._
-    val rows = eventCents(spark, dir).as[UserEvent].collect()
-    // the group space is segment-sized (5): 4 state partitions
-    val emissions = ReplayHarness.updateModeEmissions(
-      spark, rows.toIndexedSeq, chunks, statePartitions = 4, prefix = "ss_join")(
-      ds => enrichedAgg(spark, dir)(ds.toDF()))
-    foldEmissions(emissions)
-  }
-
-  /** The driver-free form: the same broadcast enrichment + update-mode
-    * aggregation over distributed file-source micro-batches — SAME oracle
-    * as the MemoryStream twin (stream-static-equals-batch).
+    * computed by streaming the events table in `chunks` file micro-batches
+    * ([[ReplayHarness.emissionsFromFiles]]) joined to the static customer
+    * dim. The group space is segment-sized (5): 4 state partitions.
     */
   def segmentActivityFromFiles(spark: SparkSession, dir: String,
       chunks: Int = 3): DataFrame =
@@ -51,7 +32,7 @@ object StreamStaticJoin {
       prefix = "ss_join_file", outputMode = "update",
       col("user_id"), col("value_cents"))(enrichedAgg(spark, dir)))
 
-  /** Shared replay projection: (user_id, value_cents) — cent-scaled longs
+  /** Replay projection: (user_id, value_cents) — cent-scaled longs
     * (the repo exactness rule).
     */
   private def eventCents(spark: SparkSession, dir: String): DataFrame =
@@ -59,7 +40,7 @@ object StreamStaticJoin {
       .select(col("user_id"),
         floor(col("value") * 100).cast("long").as("value_cents"))
 
-  /** Shared streaming plan: broadcast-dim enrichment + segment counters. */
+  /** Streaming plan: broadcast-dim enrichment + segment counters. */
   private def enrichedAgg(spark: SparkSession, dir: String): DataFrame => DataFrame = {
     val dim = broadcast(Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment")))

@@ -23,8 +23,8 @@ final case class MgGroupEmit(gid: Int, k: Option[Long], cnt: Long, seen: Long)
 
 /** Streaming twin of [[HeavyHitters.boundedTopKeys]] — the heavy-hitter
   * profile whose state does NOT grow with the key universe:
-  * [[StreamingHeavyHitters]]'s exact counters hold one entry per DISTINCT
-  * key (keyspace-bounded by nature, its scaladoc's own caveat); this form
+  * [[FileReplayHeavyHitters]]'s exact counters hold one entry per DISTINCT
+  * key (keyspace-bounded by nature); this form
   * holds `groups x capacity` Misra-Gries counters TOTAL, regardless of how
   * many keys the stream ever carries — the configuration that survives an
   * unbounded-cardinality firehose.
@@ -67,46 +67,12 @@ object StreamingBoundedHeavyHitters {
 
   /** Driver query: the same top-10 hot customer keys as the batch
     * `q_heavy_hitters`, through the bounded streaming counters in `chunks`
-    * micro-batches (MemoryStream replay — the single-endpoint ingest seam).
-    * Readback selects each group's summary at its maximum `seen` stamp (the
-    * final batch's emission), turns it into the (k, cnt)+sentinel summary
-    * frame, and ranks with the shared tail. Capacity 65536 puts every test
-    * scale in the exact regime, so the row set hash-matches the exact
-    * profile's oracle.
-    */
-  def hotCustomers(spark: SparkSession, dir: String, chunks: Int = 3,
-      groups: Int = 8, capacity: Int = 1 << 16): DataFrame = {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val rows = Tables.orders(spark, dir)
-      .select(col("o_custkey")).as[Long].collect()
-    val name = s"hh_bounded_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-    val q = ReplayHarness.runWithStatePartitions(spark, 8) {
-      summaryStream(input.toDS(), groups, capacity)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-    }
-    val emissions = try {
-      val per = math.max(1, (rows.length + chunks - 1) / chunks)
-      rows.grouped(per).foreach { slice =>
-        input.addData(slice.toIndexedSeq)
-        q.processAllAvailable()
-      }
-      val t = spark.table(name)
-      spark.createDataFrame(java.util.Arrays.asList(t.collect(): _*), t.schema)
-    } finally {
-      q.stop()
-      try spark.catalog.dropTempView(name) catch { case _: Exception => () }
-    }
-    foldEmissions(emissions)
-  }
-
-  /** The driver-free form: the same hashed-group Misra-Gries state over
-    * distributed file-source micro-batches
-    * ([[ReplayHarness.emissionsFromFiles]]; fold-order-independent in the
-    * exact regime, so no ordering constraint on the staging) — SAME
-    * oracle as the exact batch profile.
+    * file micro-batches ([[ReplayHarness.emissionsFromFiles]];
+    * fold-order-independent in the exact regime, so no ordering constraint
+    * on the staging). Readback selects each group's summary at its maximum
+    * `seen` stamp (the final batch's emission) and ranks with the shared
+    * tail. Capacity 65536 puts every test scale in the exact regime, so the
+    * row set hash-matches the exact profile's oracle.
     */
   def hotCustomersFromFiles(spark: SparkSession, dir: String, chunks: Int = 3,
       groups: Int = 8, capacity: Int = 1 << 16): DataFrame = {

@@ -6,9 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.operators.CleanCorpus
 import graft.sources.Tables
 
-/** One gated document entering the streaming dedup state. */
-final case class GatedDoc(doc_id: Long, content_hash: String)
-
 /** Streaming twin of the fused corpus-clean pipeline
   * ([[graft.operators.CleanCorpus]]): the language and quality gates are
   * STATELESS per-row expressions (they run identically inside a streaming
@@ -33,23 +30,10 @@ object StreamingCleanCorpus {
     CleanCorpus.gatedDocs(docs).select(col("doc_id"), col("content_hash"))
 
   /** Driver query: the dedup ledger of the streamed clean pipeline in
-    * `chunks` micro-batches (the Replay seam), equal to the batch
-    * pipeline's grouping. Ordered by content_hash for the oracle.
-    */
-  def cleanLedger(spark: SparkSession, dir: String, chunks: Int = 3): DataFrame = {
-    import spark.implicits._
-    val rows = gated(Tables.documents(spark, dir)).as[GatedDoc].collect()
-    val emissions = ReplayHarness.updateModeEmissions(
-      spark, rows.toIndexedSeq, chunks, statePartitions = 8, prefix = "clean_stream")(
-      ds => ledgerAgg(ds.toDF()))
-    foldEmissions(emissions)
-  }
-
-  /** The driver-free form: the same stateless gates and incremental dedup
-    * ledger over distributed file-source micro-batches — SAME oracle as
-    * the MemoryStream twin. The gate projection runs INSIDE the staging
-    * write (executor-side), so rejected documents never even reach the
-    * staged replay, let alone the driver.
+    * `chunks` file micro-batches, equal to the batch pipeline's grouping
+    * and ordered by content_hash for the oracle. The gate projection runs
+    * INSIDE the staging write (executor-side), so rejected documents never
+    * even reach the staged replay, let alone the driver.
     */
   def cleanLedgerFromFiles(spark: SparkSession, dir: String,
       chunks: Int = 3): DataFrame =

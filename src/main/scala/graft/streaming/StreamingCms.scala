@@ -6,16 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.operators.Sketches
 import graft.sources.Tables
 
-/** One raw keyed fact row entering the streaming counter grid — the
-  * depth-explode happens INSIDE the stream (narrow), so the ingest seam
-  * carries each input row once, not once per depth row.
-  */
-final case class CmsRow(user_id: Long, event_type: String)
-
 /** Streaming twin of [[Sketches.cmsCounts]]: the Count-Min counter grid
   * maintained incrementally as a plain update-mode streaming
   * `groupBy(d, bucket).count()` — built-in incremental aggregation, like
-  * [[StreamingHeavyHitters]] — with [[Sketches.cmsEstimate]]'s probe tail
+  * [[FileReplayHeavyHitters]] — with [[Sketches.cmsEstimate]]'s probe tail
   * over the final grid, against the SAME oracle as the batch form.
   *
   * Scale: state is AT MOST depth x width counters — the CMS's whole point
@@ -27,9 +21,9 @@ final case class CmsRow(user_id: Long, event_type: String)
   */
 object StreamingCms {
 
-  /** The grid update every form shares — [[Sketches.cmsSketch]] itself
-    * (ONE spelling of the aggregation, so the batch operator and the
-    * streaming twins can never disagree). All upstream ops are narrow
+  /** The grid update — [[Sketches.cmsSketch]] itself (ONE spelling of the
+    * aggregation, so the batch operator and the streaming twin can never
+    * disagree). All upstream ops are narrow
     * (filter/projection/explode), so the only stateful operator is the
     * grid-sized count.
     */
@@ -46,29 +40,14 @@ object StreamingCms {
     Sketches.cmsEstimate(sketch,
       Sketches.cmsProbes(Sketches.cmsKeyedEvents(spark, dir)))
 
-  /** Driver query: the same probe estimates as the batch `q_cms_counts`,
-    * produced by streaming the events table through the incremental grid
-    * in `chunks` micro-batches. The MemoryStream feed is the
-    * single-endpoint ingest seam (the Replay pattern).
-    */
-  def cmsUserTypeCounts(spark: SparkSession, dir: String,
-      chunks: Int = 3): DataFrame = {
-    import spark.implicits._
-    val rows = Tables.events(spark, dir)
-      .filter(col("user_id").isNotNull && col("event_type").isNotNull)
-      .select(col("user_id"), col("event_type")).as[CmsRow].collect()
-    val emissions = ReplayHarness.updateModeEmissions(
-      spark, rows.toIndexedSeq, chunks, statePartitions = 4, prefix = "cms_stream")(
-      ds => gridCounts(ds.toDF()))
-    estimateTail(spark, dir, foldEmissions(emissions))
-  }
-
-  /** The driver-free form: raw (event_id, user_id, event_type) fact rows
-    * staged as range-ordered parquet chunks and consumed as real
-    * micro-batches; the key/explode projection runs INSIDE the stream, so
-    * the grid is maintained by genuine partitioned state updates with no
-    * input row on the driver. Order-free (increments commute — the range
-    * staging is deterministic chunking only); SAME oracle.
+  /** Driver query: the same probe estimates as the batch `q_cms_counts`.
+    * Raw (event_id, user_id, event_type) fact rows are staged as
+    * range-ordered parquet chunks and consumed as real micro-batches; the
+    * key/explode projection runs INSIDE the stream (narrow), so each input
+    * row crosses the seam once, not once per depth row, and the grid is
+    * maintained by genuine partitioned state updates. Order-free
+    * (increments commute — the range staging is deterministic chunking
+    * only).
     */
   def cmsUserTypeCountsFromFiles(spark: SparkSession, dir: String,
       chunks: Int = 3): DataFrame = {

@@ -1,13 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-
-/** One replayed document arrival entering the streaming dedup. */
-final case class DocArrival(ts: java.sql.Timestamp, doc_id: Long, text: String)
 
 /** Streaming exact dedup — the incremental twin of
   * [[graft.operators.Dedup.exact]] for ingest-time pipelines: a document
@@ -44,69 +40,25 @@ object StreamingDedup {
       .dropDuplicatesWithinWatermark(keyName)
 
   /** Driver query: the documents table replayed through [[dedupped]] in
-    * ~`chunks` micro-batches, returning the surviving content-hash KEY SET
-    * (ordered). Arrival times are synthetic and deterministic (one second
-    * per doc_id from a fixed epoch), and the horizon covers the whole
-    * replay span, so no state evicts mid-run and the survivor set equals
-    * the batch exact-dedup key set — the incremental-equals-batch property
-    * (the same certification pattern as `q_approx_distinct_streaming` /
-    * `mqtt_history_streaming`), checked against the batch form's DuckDB
-    * oracle. Horizon EVICTION semantics (re-arrival after expiry flows
-    * again) are exercised at unit scale by StreamingDedupSpec, where the
-    * full-horizon oracle configuration would be vacuous.
+    * `chunks` file micro-batches, returning the surviving content-hash KEY
+    * SET (ordered). The synthetic arrival frame ([[arrivalsFrame]]) is
+    * STAGED distributed ([[ReplayHarness.emissionsFromFiles]], append mode
+    * — survivors emit on arrival, the watermark only evicts, so no flush
+    * sentinel), and the horizon covers the whole replay span
+    * ([[spanHorizon]]), so no state evicts mid-run and the survivor set
+    * equals the batch exact-dedup key set — the incremental-equals-batch
+    * property, checked against the batch form's DuckDB oracle. Horizon
+    * EVICTION semantics (re-arrival after expiry flows again) are
+    * exercised at unit scale by StreamingDedupSpec, where the full-horizon
+    * oracle configuration would be vacuous.
     *
     * Output is the key set only: WHICH physical row survives as a key's
     * first arrival depends on intra-batch partition processing order, so
     * doc ids are deliberately not part of the certified surface — the
     * batch operator ([[graft.operators.Dedup.exact]]) remains the
-    * keep-list authority.
-    *
-    * Scale: state is keyed by the 128-bit hash only (O(distinct keys per
-    * horizon), never the document bodies) and hash-partitions across
-    * executors; the driver-side replay is the single-endpoint ingest seam
-    * (the [[Replay]] pattern) — everything past the MemoryStream is
-    * partitioned streaming execution.
-    */
-  def exactWithinHorizon(spark: SparkSession, dir: String, chunks: Int = 3,
-      horizon: String = "30 days"): DataFrame = {
-    import spark.implicits._
-    val rows = arrivals(spark, Tables.documents(spark, dir))
-    keySetWithinHorizon(spark, rows, "content_hash",
-      md5(trim(col("text")).cast("binary")), chunks, horizon)
-      .toDF("content_hash").orderBy(col("content_hash"))
-  }
-
-  /** The incremental twin of [[graft.operators.Dedup.normalizedDups]]: a
-    * document whose CANONICAL form (case-fold/scrub/collapse —
-    * [[graft.operators.TextAnalysis.normalize]]'s hash) was already seen
-    * within the horizon is dropped at arrival, so SHOUTED/re-punctuated
-    * reposts never reach downstream. Replays the probe-augmented corpus
-    * (every probe twin collapses into its original's canonical key, so the
-    * certified drop provably fires), and derives the horizon from the
-    * replay span (the StreamingWinnow rule) — probe ids push arrival times
-    * ~11 days out, and a fixed horizon would silently start evicting on a
-    * larger corpus. Same bounded-state design as [[exactWithinHorizon]]:
-    * state is the 128-bit canonical hash per key per horizon, never bodies.
-    */
-  def normalizedWithinHorizon(spark: SparkSession, dir: String,
-      chunks: Int = 3): DataFrame = {
-    import spark.implicits._
-    val rows = arrivals(spark,
-      graft.operators.Dedup.normProbeAugmented(Tables.documents(spark, dir)))
-    // horizon > replay span so no survivor key evicts mid-certification
-    val horizon = s"${rows.last.doc_id + 3600} seconds"
-    keySetWithinHorizon(spark, rows, "norm_hash",
-      md5(canonicalText.cast("binary")), chunks, horizon)
-      .toDF("norm_hash").orderBy(col("norm_hash"))
-  }
-
-  /** The driver-free form of [[exactWithinHorizon]]: the synthetic arrival
-    * frame is STAGED distributed ([[ReplayHarness.emissionsFromFiles]],
-    * append mode — survivors emit on arrival, the watermark only evicts,
-    * so no flush sentinel) and the horizon derives from the replay span
-    * (the StreamingWinnow rule; the only driver-visible scalar is
-    * max(doc_id)). SAME oracle as the MemoryStream twin: the surviving
-    * content-hash key set.
+    * keep-list authority. State is keyed by the 128-bit hash only
+    * (O(distinct keys per horizon), never the document bodies) and
+    * hash-partitions across executors.
     */
   def exactWithinHorizonFromFiles(spark: SparkSession, dir: String,
       chunks: Int = 3): DataFrame = {
@@ -121,9 +73,17 @@ object StreamingDedup {
       .select(col("content_hash")).orderBy(col("content_hash"))
   }
 
-  /** The driver-free form of [[normalizedWithinHorizon]]: the
-    * probe-augmented corpus staged distributed, canonical-hash state,
-    * span-derived horizon. SAME oracle as the MemoryStream twin.
+  /** The incremental twin of [[graft.operators.Dedup.normalizedDups]]: a
+    * document whose CANONICAL form (case-fold/scrub/collapse —
+    * [[graft.operators.TextAnalysis.normalize]]'s hash) was already seen
+    * within the horizon is dropped at arrival, so SHOUTED/re-punctuated
+    * reposts never reach downstream. Replays the probe-augmented corpus
+    * (every probe twin collapses into its original's canonical key, so the
+    * certified drop provably fires) with a span-derived horizon — probe ids
+    * push arrival times ~11 days out, and a fixed horizon would silently
+    * start evicting on a larger corpus. Same bounded-state design as
+    * [[exactWithinHorizonFromFiles]]: state is the 128-bit canonical hash
+    * per key per horizon, never bodies.
     */
   def normalizedWithinHorizonFromFiles(spark: SparkSession, dir: String,
       chunks: Int = 3): DataFrame = {
@@ -145,11 +105,10 @@ object StreamingDedup {
     * decode/embed stages never touch the duplicate bytes. The key is the
     * media content hash ([[graft.operators.Multimodal.asMedia]]'s
     * content_md5 spelling — the RAW payload bytes, deliberately NOT the
-    * trimmed-text key of [[exactWithinHorizon]]: blob dedup has no
+    * trimmed-text key of [[exactWithinHorizonFromFiles]]: blob dedup has no
     * whitespace semantics), state never holds the bytes, and the probe
     * family (+4e6 byte-exact copies) proves the drop fires. Span-derived
-    * horizon (the StreamingWinnow rule — probe ids push arrivals ~46 days
-    * out). Oracle: the distinct payload-hash key set of the same
+    * horizon (probe ids push arrivals ~46 days out). Oracle: the distinct payload-hash key set of the same
     * augmented corpus.
     */
   def mediaWithinHorizonFromFiles(spark: SparkSession, dir: String,
@@ -169,7 +128,7 @@ object StreamingDedup {
       .select(col("media_md5")).orderBy(col("media_md5"))
   }
 
-  /** The canonical form shared by the normalized twins: case-fold, scrub
+  /** The canonical form of the normalized dedup: case-fold, scrub
     * non-alphanumerics, collapse runs — TextAnalysis.normalize's hash
     * contract expressed over `text`.
     */
@@ -179,23 +138,9 @@ object StreamingDedup {
       translate(col("text"), az.toUpperCase, az), "[^a-z0-9 ]", " "), " +", " "))
   }
 
-  /** Deterministic synthetic arrival frame: one second per doc_id from a
-    * fixed epoch, sorted by doc_id (the replay seam both twins share).
-    */
-  private def arrivals(spark: SparkSession, docs: DataFrame): Seq[DocArrival] = {
-    import spark.implicits._
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    docs.select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)].collect()
-      .sortBy(_._1)
-      .map { case (id, text) =>
-        DocArrival(new java.sql.Timestamp(base + id * 1000L), id, text) }
-      .toSeq
-  }
-
-  /** The [[arrivals]] frame built EXECUTOR-SIDE (no collect): the same
-    * one-second-per-doc_id event times, as a DataFrame for [[FileStage]].
-    * Shared with [[StreamingWinnow]]'s file twin.
+  /** Deterministic synthetic arrival frame, built EXECUTOR-SIDE: one
+    * second per doc_id from a fixed epoch, as a DataFrame for
+    * [[FileStage]]. Shared with [[StreamingWinnow]].
     */
   private[streaming] def arrivalsFrame(docs: DataFrame): DataFrame =
     docs.select(
@@ -206,42 +151,12 @@ object StreamingDedup {
   /** Horizon covering the whole replay span (arrival times are doc_id
     * seconds after base, so max doc_id + slack covers every arrival) — a
     * fixed horizon would silently start evicting state on a larger corpus.
-    * The one driver-visible scalar of the file twins.
+    * The one driver-visible scalar of the replay. Shared with
+    * [[StreamingWinnow]].
     */
-  private def spanHorizon(docs: DataFrame): String = {
+  private[streaming] def spanHorizon(docs: DataFrame): String = {
     val maxId = Option(docs.agg(max(col("doc_id").cast("long"))).head()
       .getAs[java.lang.Long](0)).map(_.toLong).getOrElse(0L) // empty corpus
     s"${maxId + 3600} seconds"
-  }
-
-  /** Shared MemoryStream micro-batch harness: replay `rows` in ~`chunks`
-    * batches through [[deduppedBy]] and return the surviving key set.
-    */
-  private def keySetWithinHorizon(spark: SparkSession, rows: Seq[DocArrival],
-      keyName: String, key: Column, chunks: Int,
-      horizon: String): Seq[String] = {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val name = s"dedup_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val input = MemoryStream[DocArrival]
-    // state sized to the distinct-key space (hundreds at test scale); the
-    // clone-at-start contract is documented at
-    // ReplayHarness.runWithStatePartitions
-    val q = ReplayHarness.runWithStatePartitions(spark, 4) {
-      deduppedBy(input.toDF(), horizon, keyName, key)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-    }
-    try {
-      val per = math.max(1, (rows.length + chunks - 1) / chunks)
-      rows.grouped(per).foreach { slice =>
-        input.addData(slice.toSeq)
-        q.processAllAvailable()
-      }
-      spark.table(name).select(col(keyName)).as[String].collect().toSeq
-    } finally {
-      q.stop()
-      try spark.catalog.dropTempView(name) catch { case _: Exception => () }
-    }
   }
 }

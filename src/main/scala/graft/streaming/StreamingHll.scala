@@ -6,9 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.operators.Sketches
 import graft.sources.Tables
 
-/** One register observation entering the streaming HLL sketch. */
-final case class HllHit(event_type: String, bucket: Int, rho: Int)
-
 /** Streaming twin of [[Sketches.hllDistinct]]: the HyperLogLog registers
   * maintained incrementally as a plain update-mode streaming
   * `groupBy(group, bucket).max(rho)` — Spark's built-in incremental
@@ -26,25 +23,9 @@ object StreamingHll {
 
   /** Driver query: the same (event_type, n_zero_buckets, sum_pow,
     * est_distinct) as the batch `q_hll_distinct`, produced by streaming
-    * the events table through the incremental registers in `chunks`
-    * micro-batches. The MemoryStream feed is the single-endpoint ingest
-    * seam (the Replay pattern); everything past it is partitioned
-    * streaming execution.
-    */
-  def hllDistinctUsers(spark: SparkSession, dir: String,
-      chunks: Int = 3): DataFrame = {
-    import spark.implicits._
-    val rows = hllHits(spark, dir).as[HllHit].collect()
-    // the group space is event-type-sized (a handful): 4 state partitions
-    val emissions = ReplayHarness.updateModeEmissions(
-      spark, rows.toIndexedSeq, chunks, statePartitions = 4, prefix = "hll_stream")(
-      _.groupBy(col("event_type"), col("bucket")).agg(max(col("rho")).as("rho_max")))
-    foldEmissions(emissions)
-  }
-
-  /** The driver-free form: same observations, incremental register maxima,
-    * and monotone fold over distributed file-source micro-batches — SAME
-    * oracle as the batch `q_hll_distinct`.
+    * the events table through the incremental registers in `chunks` file
+    * micro-batches ([[ReplayHarness.emissionsFromFiles]]). The group space
+    * is event-type-sized (a handful): 4 state partitions.
     */
   def hllDistinctUsersFromFiles(spark: SparkSession, dir: String,
       chunks: Int = 3): DataFrame =
@@ -54,7 +35,7 @@ object StreamingHll {
       col("event_type"), col("bucket"))(
       _.groupBy(col("event_type"), col("bucket")).agg(max(col("rho")).as("rho_max"))))
 
-  /** Shared replay projection: (event_type, bucket, rho) observations. */
+  /** Replay projection: (event_type, bucket, rho) observations. */
   private def hllHits(spark: SparkSession, dir: String): DataFrame =
     Sketches.hllObservations(
         Tables.events(spark, dir), "user_id", "event_type")

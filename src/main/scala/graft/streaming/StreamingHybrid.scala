@@ -1,5 +1,10 @@
 package graft.streaming
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.FiniteDuration
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -81,31 +86,26 @@ object StreamingHybrid {
     // guide's overlap-independent-jobs rule applied inside one composed
     // query: stream B's batches back-fill the cores stream A's commit
     // latencies leave idle). Start-time conf capture is serialized by
-    // ReplayHarness.confLock; everything else is per-leg-local.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val vecF = Future(ReplayHarness.emissionsFromFiles(
-      spark, staged, chunks, statePartitions = StreamPartitions,
-      prefix = "hybrid_vec_file", outputMode = "append", col("query_id"))(
-      stream => stream
-        .withColumn("blk", explode(array((0 until VecBlocks).map(b =>
-          lit(b.toLong)): _*)))
-        .join(corpus, Seq("blk"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .withColumn("nn", col("qn") * col("nrm"))
-        .select(col("query_id"), col("vec_id"),
-          when(col("nn") === 0.0, 0.0)
-            .otherwise(VF.dot(col("qv"), col("embedding")) / col("nn"))
-            .as("cos"))))
-    val lexF = Future(StreamingBm25.bm25FromFiles(spark, dir, chunks, depth)
-      .select(col("query_id"), col("doc_id"), col("rank").as("lex_rank")))
-    // generous per-leg bound (ADVICE r21): a wedged leg fails the query
-    // with a TimeoutException instead of hanging the suite forever; the
-    // legs' own temp dirs are cleaned by their harness finally-blocks
+    // ReplayHarness.confLock; everything else is per-leg-local. Generous
+    // per-leg bound: a wedged leg fails the query with a
+    // TimeoutException instead of hanging the suite forever.
     import scala.concurrent.duration.DurationInt
-    val legTimeout = 30.minutes
-    val emissions = Await.result(vecF, legTimeout)
-    val lex = Await.result(lexF, legTimeout)
+    val (emissions, lex) = bothLegs(spark, 30.minutes)(
+      ReplayHarness.emissionsFromFiles(
+        spark, staged, chunks, statePartitions = StreamPartitions,
+        prefix = "hybrid_vec_file", outputMode = "append", col("query_id"))(
+        stream => stream
+          .withColumn("blk", explode(array((0 until VecBlocks).map(b =>
+            lit(b.toLong)): _*)))
+          .join(corpus, Seq("blk"))
+          .filter(col("query_id") =!= col("vec_id"))
+          .withColumn("nn", col("qn") * col("nrm"))
+          .select(col("query_id"), col("vec_id"),
+            when(col("nn") === 0.0, 0.0)
+              .otherwise(VF.dot(col("qv"), col("embedding")) / col("nn"))
+              .as("cos"))),
+      StreamingBm25.bm25FromFiles(spark, dir, chunks, depth)
+        .select(col("query_id"), col("doc_id"), col("rank").as("lex_rank")))
 
     // re-emission idempotence (ADVICE r20): a replayed append-mode
     // micro-batch would duplicate scored (query_id, vec_id) rows and
@@ -119,5 +119,32 @@ object StreamingHybrid {
       .select(col("query_id"), col("vec_id").as("doc_id"),
         col("rank").cast("long").as("vec_rank"))
     Bm25.rrfFuse(lex, vec, k).orderBy(col("query_id"), col("rank"))
+  }
+
+  /** Run two independent legs concurrently and return both results. If
+    * either leg fails, or the pair outlives `timeout`, every stream started
+    * in the session since the legs began is stopped (a stopped stream's
+    * `awaitTermination` returns, so a wedged leg unblocks), both legs are
+    * awaited, and only then is the first failure rethrown — no leg's
+    * StreamingQuery outlives the call. The session runs one composed query
+    * at a time (Bench, Verify and the specs all do), so the streams started
+    * meanwhile are the legs'; the legs' temp dirs are cleaned by their
+    * harness finally-blocks.
+    */
+  private[streaming] def bothLegs[A, B](spark: SparkSession,
+      timeout: FiniteDuration)(a: => A, b: => B): (A, B) = {
+    val before = spark.streams.active.map(_.id).toSet
+    val fa = Future(a)
+    val fb = Future(b)
+    try Await.result(fa.zip(fb), timeout)
+    catch {
+      case NonFatal(e) =>
+        val deadline = timeout.fromNow
+        while (!(fa.isCompleted && fb.isCompleted) && deadline.hasTimeLeft()) {
+          spark.streams.active.filterNot(q => before(q.id)).foreach(_.stop())
+          Thread.sleep(50)
+        }
+        throw e
+    }
   }
 }

@@ -7,9 +7,6 @@ import graft.functions.KmvSketch
 import graft.operators.Sketches
 import graft.sources.Tables
 
-/** One pre-hashed observation entering the streaming KMV sketch. */
-final case class KmvHit(event_type: String, hv: Long)
-
 /** Streaming twin of [[Sketches.kmvDistinct]]: the KMV bottom-k sketch
   * maintained incrementally as a plain update-mode streaming
   * `groupBy(group).agg(kmv_kth(...))` — the custom
@@ -28,24 +25,9 @@ object StreamingKmv {
 
   /** Driver query: the same (event_type, n_kept, kth_hash, est_distinct)
     * as the batch `q_kmv_distinct`, produced by streaming the events table
-    * through the incremental sketch in `chunks` micro-batches. The
-    * MemoryStream feed is the single-endpoint ingest seam (the Replay
-    * pattern); everything past it is partitioned streaming execution.
-    */
-  def kmvDistinctUsers(spark: SparkSession, dir: String,
-      chunks: Int = 3): DataFrame = {
-    import spark.implicits._
-    val rows = kmvHits(spark, dir).as[KmvHit].collect()
-    // the group space is event-type-sized (a handful): 4 state partitions
-    val emissions = ReplayHarness.updateModeEmissions(
-      spark, rows.toIndexedSeq, chunks, statePartitions = 4, prefix = "kmv_stream")(
-      ds => kmvAgg(ds.toDF()))
-    foldEmissions(emissions)
-  }
-
-  /** The driver-free form: same projection, incremental KMV aggregate, and
-    * monotone fold over distributed file-source micro-batches — SAME
-    * oracle as the batch `q_kmv_distinct`.
+    * through the incremental sketch in `chunks` file micro-batches
+    * ([[ReplayHarness.emissionsFromFiles]]). The group space is
+    * event-type-sized (a handful): 4 state partitions.
     */
   def kmvDistinctUsersFromFiles(spark: SparkSession, dir: String,
       chunks: Int = 3): DataFrame =
@@ -54,10 +36,8 @@ object StreamingKmv {
       prefix = "kmv_file", outputMode = "update",
       col("event_type"), col("hv"))(kmvAgg))
 
-  /** Shared replay projection: (event_type, hv), nulls dropped — a null
-    * user_id hashes to a null hv; the batch twin's aggregate skips nulls,
-    * so drop them here too (the primitive Long encoder would otherwise
-    * throw and the twins would diverge).
+  /** Replay projection: (event_type, hv), nulls dropped — a null user_id
+    * hashes to a null hv, and the batch twin's aggregate skips nulls.
     */
   private def kmvHits(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)

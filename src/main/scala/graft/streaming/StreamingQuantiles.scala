@@ -6,9 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.operators.Sketches
 import graft.sources.Tables
 
-/** One pre-binned observation entering the streaming histogram. */
-final case class BinHit(event_type: String, bin: Long)
-
 /** Streaming twin of [[Sketches.approxQuantiles]]: the fixed-width
   * histogram maintained incrementally as a plain streaming `groupBy(group,
   * bin).count()` in update mode — Spark's built-in incremental aggregation
@@ -26,23 +23,8 @@ object StreamingQuantiles {
 
   /** Driver query: the same (event_type, n_rows, p50/p90/p99 estimates) as
     * the batch `q_approx_quantiles`, produced by streaming the events table
-    * through the incremental histogram in `chunks` micro-batches. The
-    * MemoryStream feed is the single-endpoint ingest seam (the Replay
-    * pattern); everything past it is partitioned streaming execution.
-    */
-  def quantilesByType(spark: SparkSession, dir: String,
-      chunks: Int = 3): DataFrame = {
-    import spark.implicits._
-    val rows = binHits(spark, dir).as[BinHit].collect()
-    val emissions = ReplayHarness.updateModeEmissions(
-      spark, rows.toIndexedSeq, chunks, statePartitions = 8, prefix = "quant_stream")(
-      _.groupBy(col("event_type"), col("bin")).count())
-    foldEmissions(emissions)
-  }
-
-  /** The driver-free form: same projection, incremental histogram, and
-    * monotone fold over distributed file-source micro-batches — SAME
-    * oracle as the batch `q_approx_quantiles`.
+    * through the incremental histogram in `chunks` file micro-batches
+    * ([[ReplayHarness.emissionsFromFiles]]).
     */
   def quantilesByTypeFromFiles(spark: SparkSession, dir: String,
       chunks: Int = 3): DataFrame =
@@ -52,7 +34,7 @@ object StreamingQuantiles {
       col("event_type"), col("bin"))(
       _.groupBy(col("event_type"), col("bin")).count()))
 
-  /** Shared replay projection: (event_type, bin), null bins dropped (a
+  /** Replay projection: (event_type, bin), null bins dropped (a
     * null value bins to a null bin; the driver events table carries none —
     * this keeps the seam total).
     */

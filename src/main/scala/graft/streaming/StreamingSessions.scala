@@ -1,17 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
-
-/** One replayed event entering the streaming sessionizer. */
-final case class EventArrival(ts: java.sql.Timestamp, user_id: Long)
-
-/** One finalized session leaving the memory sink. */
-final case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
-    session_end: java.sql.Timestamp, n_events: Long)
 
 /** Streaming sessionization — the incremental twin of
   * [[graft.operators.Relational.sessionWindows]], completing the streaming
@@ -27,9 +17,8 @@ final case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
   * watermark evicts every finalized session, which is what makes
   * sessionization over an unbounded clickstream viable at all.
   *
-  * Scale: state hash-partitions by user across executors; the driver-side
-  * replay is the single-endpoint ingest seam (the [[Replay]] pattern) —
-  * everything past the MemoryStream is partitioned streaming execution.
+  * Scale: state hash-partitions by user across executors. The driver query
+  * replays the events table through [[FileReplaySessions]].
   */
 object StreamingSessions {
 
@@ -44,62 +33,4 @@ object StreamingSessions {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"))
-
-  /** Driver query: the events table replayed through [[sessions]] in
-    * ~`chunks` micro-batches, checked against the SAME DuckDB oracle as the
-    * batch `q_session_windows` (gap-based sessionization is a pure
-    * event-time function, so incremental-equals-batch holds exactly).
-    *
-    * Replay is in event-time order so the watermark advances monotonically
-    * and earlier sessions finalize while later chunks are still streaming —
-    * the steady-state behavior, not one giant final flush. Two sentinel
-    * events (user_id -1) past the horizon then advance the watermark beyond
-    * every real session's end: the first carries the high event time, the
-    * second triggers the batch that runs WITH that watermark (watermarks
-    * take effect one batch after the event that moved them). The sentinel's
-    * own session never finalizes (nothing passes ITS end) and is filtered
-    * out regardless.
-    */
-  def userSessions(spark: SparkSession, dir: String, chunks: Int = 3): DataFrame = {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val rows = Tables.events(spark, dir)
-      .select(col("ts").cast("timestamp"), col("user_id"))
-      .as[EventArrival].collect()
-      .sortBy(_.ts.getTime)
-    if (rows.isEmpty)
-      return spark.emptyDataset[SessionOut].toDF()
-        .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
-        .withColumn("session_end", col("session_end").cast("timestamp_ntz"))
-    val horizon = rows.last.ts.getTime + 86400000L
-    val name = s"sessions_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val input = MemoryStream[EventArrival]
-    // state sized to the open-session keyspace; the clone-at-start contract
-    // is documented at ReplayHarness.runWithStatePartitions
-    val q = ReplayHarness.runWithStatePartitions(spark, 8) {
-      sessions(input.toDF(), gap = "30 minutes", watermark = "10 minutes")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-    }
-    val finalized = try {
-      val per = math.max(1, (rows.length + chunks - 1) / chunks)
-      rows.grouped(per).foreach { slice =>
-        input.addData(slice.toSeq)
-        q.processAllAvailable()
-      }
-      Seq(0L, 1000L).foreach { off =>
-        input.addData(Seq(EventArrival(new java.sql.Timestamp(horizon + off), -1L)))
-        q.processAllAvailable()
-      }
-      spark.table(name).as[SessionOut].collect().toSeq
-    } finally {
-      q.stop()
-      try spark.catalog.dropTempView(name) catch { case _: Exception => () }
-    }
-    spark.createDataset(finalized).toDF()
-      .filter(col("user_id") =!= -1L)
-      .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
-      .withColumn("session_end", col("session_end").cast("timestamp_ntz"))
-      .orderBy(col("user_id"), col("session_start"))
-  }
 }

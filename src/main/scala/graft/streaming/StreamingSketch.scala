@@ -55,25 +55,9 @@ object StreamingSketch {
 
   /** Driver query: the same (event_type, n_buckets_hit, est_distinct) as
     * the batch `q_approx_distinct`, produced by streaming the events table
-    * through the incremental sketch in `chunks` micro-batches. The
-    * MemoryStream feed is the single-endpoint ingest seam (the Replay
-    * pattern); everything past it is partitioned streaming execution.
-    */
-  def approxDistinctUsers(spark: SparkSession, dir: String,
-      chunks: Int = 3): DataFrame = {
-    import spark.implicits._
-    val rows = bucketHits(spark, dir).as[BucketHit].collect()
-    // the group space is event-type-sized (a handful): 4 state partitions
-    val emissions = ReplayHarness.updateModeEmissions(
-      spark, rows.toIndexedSeq, chunks, statePartitions = 4, prefix = "sketch_stream")(
-      counts(_).toDF())
-    foldEmissions(emissions)
-  }
-
-  /** The driver-free form: the same projection, sketch state, and monotone
-    * fold, ingested through [[ReplayHarness.emissionsFromFiles]]'s
-    * distributed file-source staging instead of a driver-collected
-    * MemoryStream — SAME oracle as the batch `q_approx_distinct`.
+    * through the incremental sketch in `chunks` file micro-batches
+    * ([[ReplayHarness.emissionsFromFiles]]). The group space is
+    * event-type-sized (a handful): 4 state partitions.
     */
   def approxDistinctUsersFromFiles(spark: SparkSession, dir: String,
       chunks: Int = 3): DataFrame = {

@@ -14,7 +14,7 @@ import graft.sources.mqtt.MqttBroker
   * (`INSERT ... ON DUPLICATE KEY UPDATE`, /root/reference/mqtt2sql.py:579-629)
   * — run END-TO-END through Structured Streaming and exposed as a
   * driver-checkable query: replay messages are published into the DSv2
-  * source ([[Replay]], the seam shared with [[StreamingHistory]]), consumed
+  * source ([[Replay]], the broker-replay seam), consumed
   * under Trigger.AvailableNow in multiple micro-batches, and each batch is
   * merged into the keyed state by [[UpsertSink.merge]] (the same
   * foreachBatch body the JDBC MERGE variant shares). The final state's

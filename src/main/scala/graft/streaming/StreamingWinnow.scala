@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.functions.WinnowFingerprints
@@ -36,63 +35,17 @@ object StreamingWinnow {
       .dropDuplicatesWithinWatermark("fp")
 
   /** Driver query: the documents table replayed through [[novelPassages]]
-    * in ~`chunks` micro-batches; synthetic deterministic arrival times and
-    * a full-span horizon (the [[StreamingDedup.exactWithinHorizon]]
-    * configuration), so the survivor set equals the batch DISTINCT
-    * fingerprint set and certifies against that oracle.
-    *
-    * The horizon is DERIVED from the replay's own time span (arrival times
-    * are doc_id seconds after base, so max doc_id + slack covers every
-    * arrival): a fixed horizon would silently start evicting state — and
-    * re-admitting duplicate fingerprints — once a corpus grew past it,
-    * diverging from the batch oracle (the StreamingSessions rule: the
-    * certification harness sizes its watermark to the data, not a constant).
-    */
-  def firstSeenPassages(spark: SparkSession, dir: String, chunks: Int = 3): DataFrame = {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val rows = Tables.documents(spark, dir)
-      .select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)].collect()
-      .sortBy(_._1)
-      .map { case (id, text) =>
-        DocArrival(new java.sql.Timestamp(base + id * 1000L), id, text) }
-    val horizon = s"${(if (rows.nonEmpty) rows.last.doc_id else 0L) + 3600L} seconds"
-    val name = s"winnow_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val input = MemoryStream[DocArrival]
-    val q = ReplayHarness.runWithStatePartitions(spark, 8) {
-      novelPassages(input.toDF(), horizon)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-    }
-    val fps = try {
-      val per = math.max(1, (rows.length + chunks - 1) / chunks)
-      rows.grouped(per).foreach { slice =>
-        input.addData(slice.toSeq)
-        q.processAllAvailable()
-      }
-      spark.table(name).select(col("fp")).as[Long].collect().toSeq
-    } finally {
-      q.stop()
-      try spark.catalog.dropTempView(name) catch { case _: Exception => () }
-    }
-    fps.toDF("fp").orderBy(col("fp"))
-  }
-
-  /** The driver-free form: the same in-stream fingerprint explosion and
-    * first-seen state over distributed file-source micro-batches
-    * ([[ReplayHarness.emissionsFromFiles]], append mode — first-seen
-    * fingerprints emit on arrival, no flush sentinel needed) with the same
-    * span-derived horizon (the only driver-visible scalar is max(doc_id)).
-    * SAME oracle as the MemoryStream twin: the surviving fingerprint set.
+    * in `chunks` file micro-batches ([[ReplayHarness.emissionsFromFiles]],
+    * append mode — first-seen fingerprints emit on arrival, no flush
+    * sentinel needed), with synthetic deterministic arrival times and a
+    * full-span horizon ([[StreamingDedup.spanHorizon]]: no fingerprint
+    * evicts mid-run and re-admits a duplicate), so the survivor set equals
+    * the batch DISTINCT fingerprint set and certifies against that oracle.
     */
   def firstSeenPassagesFromFiles(spark: SparkSession, dir: String,
       chunks: Int = 3): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val maxId = Option(docs.agg(max(col("doc_id").cast("long"))).head()
-      .getAs[java.lang.Long](0)).map(_.toLong).getOrElse(0L) // empty corpus
-    val horizon = s"${maxId + 3600} seconds"
+    val horizon = StreamingDedup.spanHorizon(docs)
     ReplayHarness.emissionsFromFiles(
       spark, StreamingDedup.arrivalsFrame(docs), chunks, statePartitions = 8,
       prefix = "winnow_file", outputMode = "append",

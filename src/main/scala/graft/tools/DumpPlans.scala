@@ -11,7 +11,8 @@ import graft.SparkEntry
   * scale claims: pushed filters, pruned read schemas, broadcast vs
   * sort-merge picks, codegen spans, and the absence of nested-loop joins.
   * Eagerly-executing queries (streaming, iterative) are skipped — their
-  * execution is attributed by StreamProfile / the DedupClusters scaladoc.
+  * plan-shape claims rest on their batch twins' plans / the DedupClusters
+  * scaladoc (see SparkEntry.eagerQueries).
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
@@ -29,7 +30,7 @@ object DumpPlans {
     val sb = new StringBuilder
     sb.append(s"# Physical plans (sf0.001, formatted explain)\n\n")
     sb.append("Generated by `graft.tools.DumpPlans`. Streaming/iterative " +
-      "queries excluded (executed eagerly; see StreamProfile).\n")
+      "queries excluded (executed eagerly; see SparkEntry.eagerQueries).\n")
     val batch = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => eager.contains(name) }
     // plan each query ONCE; derive both the index counts and the formatted

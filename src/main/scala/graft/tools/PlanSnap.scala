@@ -20,11 +20,11 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: PlanSnap <outDir> <tag> [-f] <query> [query...]")
+    val force = args.length > 2 && args(2) == "-f"
+    val names = args.drop(if (force) 3 else 2).toSeq
+    require(names.nonEmpty, "usage: PlanSnap <outDir> <tag> [-f] <query> [query...]")
     val outDir = args(0)
     val tag = args(1)
-    val force = args(2) == "-f"
-    val names = args.drop(if (force) 3 else 2).toSeq
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = SparkSession.builder()
       .master("local[4]")

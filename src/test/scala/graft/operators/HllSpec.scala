@@ -75,7 +75,7 @@ class HllSpec extends SparkSpec {
   test("streaming twin equals the batch sketch at sf0.001 (any chunking)") {
     val batch = Sketches.hllDistinctUsers(spark, sf0001).collect().toSeq
     Seq(2, 5).foreach { chunks =>
-      val streamed = StreamingHll.hllDistinctUsers(spark, sf0001, chunks)
+      val streamed = StreamingHll.hllDistinctUsersFromFiles(spark, sf0001, chunks)
         .collect().toSeq
       assert(streamed == batch, s"chunks=$chunks")
     }

@@ -80,7 +80,7 @@ class KmvSketchSpec extends SparkSpec {
   test("streaming twin equals the batch sketch at sf0.001 (any chunking)") {
     val batch = Sketches.kmvDistinctUsers(spark, sf0001).collect().toSeq
     Seq(2, 5).foreach { chunks =>
-      val streamed = StreamingKmv.kmvDistinctUsers(spark, sf0001, chunks)
+      val streamed = StreamingKmv.kmvDistinctUsersFromFiles(spark, sf0001, chunks)
         .collect().toSeq
       assert(streamed == batch, s"chunks=$chunks")
     }

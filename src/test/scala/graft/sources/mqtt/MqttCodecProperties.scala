@@ -1,6 +1,8 @@
 package graft.sources.mqtt
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException, IOException}
+
+import scala.reflect.ClassTag
 
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
@@ -11,7 +13,9 @@ import org.scalacheck.Prop.forAll
   * 16384, §2.2.3) that the scripted end-to-end specs' small payloads never
   * reach — and packet sequences must frame without bleeding into each
   * other. Body codecs (CONNECT, PUBLISH, SUBSCRIBE) round-trip through
-  * their parsers, UTF-8 multibyte topics included.
+  * their parsers, UTF-8 multibyte topics included. Malformed input — a
+  * remaining length longer than 4 bytes, a header or body cut short —
+  * fails with a typed IOException, never a bogus allocation.
   */
 object MqttCodecProperties extends Properties("MqttCodec") {
 
@@ -77,5 +81,51 @@ object MqttCodecProperties extends Properties("MqttCodec") {
       }
       val sub = parseSubscribe(body)
       sub.packetId == pid && sub.filters.map(_._1) == filters
+    }
+
+  /** True when reading `bytes` fails with exactly `E` (EOFException is an
+    * IOException, so the class must match, not merely conform).
+    */
+  private def failsWith[E <: Throwable](bytes: Array[Byte])(
+      implicit ct: ClassTag[E]): Boolean =
+    try { readPacket(new ByteArrayInputStream(bytes)); false }
+    catch { case e: Throwable => e.getClass == ct.runtimeClass }
+
+  private def encoded(body: Array[Byte]): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    writePacket(out, PUBLISH, 0, body)
+    out.toByteArray
+  }
+
+  /** Fixed-header size: the type byte plus the remaining-length varint. */
+  private def headerLen(bodyLen: Int): Int =
+    if (bodyLen < 128) 2 else 1 + headerLen(bodyLen >>> 7)
+
+  property("5 or more remaining-length bytes are rejected (MQTT 3.1.1 2.2.3)") =
+    forAll(Gen.listOfN(4, Gen.choose(0x80, 0xFF)), Gen.choose(1, 4),
+      Gen.choose(0, 0xFF), payloadGen) { (cont, extra, last, tail) =>
+      // four continuation bytes, then more length bytes: `ff ff ff ff 7f`
+      // once decoded to -1 and threw NegativeArraySizeException
+      val more = Seq.fill(extra - 1)(0x80) :+ last
+      val bytes = ((0x30 +: cont) ++ more).map(_.toByte).toArray ++ tail
+      failsWith[IOException](bytes)
+    }
+
+  property("a header truncated mid-length is an EOFException") =
+    forAll(Gen.choose(128, 70000)) { n =>
+      val bytes = encoded(new Array[Byte](n))
+      // keep the type byte and at least one, but not all, length bytes
+      forAll(Gen.choose(2, headerLen(n) - 1)) { cut =>
+        failsWith[EOFException](bytes.take(cut))
+      }
+    }
+
+  property("a body truncated mid-way is an EOFException") =
+    forAll(payloadGen.suchThat(_.nonEmpty)) { body =>
+      val bytes = encoded(body)
+      val header = headerLen(body.length)
+      forAll(Gen.choose(header, bytes.length - 1)) { cut =>
+        failsWith[EOFException](bytes.take(cut))
+      }
     }
 }

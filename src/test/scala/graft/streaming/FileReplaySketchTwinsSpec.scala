@@ -7,13 +7,11 @@ import graft.operators.{CleanCorpus, Dedup, Sketches, Winnow}
 import graft.functions.WinnowFingerprints
 import graft.sources.Tables
 
-/** The round-13 driver-free ports of the update-mode sketch twins and the
-  * append-mode key-set twins: each file-source form must equal its batch
-  * anchor at sf0.001 (the driver re-certifies the same equalities against
-  * the DuckDB oracles at sf0.01). The MemoryStream twins' own suites pin
-  * the incremental semantics; here the certified property is that swapping
-  * the ingest seam (driver-collected MemoryStream -> distributed staged
-  * file source) changes nothing.
+/** The update-mode sketch twins and the append-mode key-set twins at their
+  * default chunking: each file-source form must equal its batch anchor at
+  * sf0.001 (the driver re-certifies the same equalities against the DuckDB
+  * oracles at sf0.01). The per-operator suites pin the incremental
+  * semantics at other chunkings.
   */
 class FileReplaySketchTwinsSpec extends SparkSpec {
   import spark.implicits._

@@ -24,7 +24,7 @@ class StreamStaticJoinSpec extends SparkSpec {
       .collect().toSeq
     assert(batch.nonEmpty)
     Seq(2, 5).foreach { chunks =>
-      val streamed = StreamStaticJoin.segmentActivity(spark, sf0001, chunks)
+      val streamed = StreamStaticJoin.segmentActivityFromFiles(spark, sf0001, chunks)
         .collect().toSeq
       assert(streamed == batch, s"chunks=$chunks")
     }

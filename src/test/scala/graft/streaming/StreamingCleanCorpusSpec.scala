@@ -26,7 +26,7 @@ class StreamingCleanCorpusSpec extends SparkSpec {
       .select($"doc_id", $"n_copies").as[(Long, Long)].collect().toMap
     assert(batch.forall { case (_, keep, n) => keptBatch(keep) == n })
     Seq(1, 4).foreach { chunks =>
-      val streamed = StreamingCleanCorpus.cleanLedger(spark, dir, chunks)
+      val streamed = StreamingCleanCorpus.cleanLedgerFromFiles(spark, dir, chunks)
         .as[(String, Long, Long)].collect().toSeq
       assert(streamed == batch, s"chunks=$chunks")
     }

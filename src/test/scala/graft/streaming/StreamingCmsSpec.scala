@@ -3,11 +3,8 @@ package graft.streaming
 import graft.SparkSpec
 import graft.operators.Sketches
 
-/** The broker-replay (MemoryStream-fed) CMS twin was demoted from the
-  * driver set in round 15 (the `_file` form carries the driver
-  * certification); this spec keeps the harness exercised: the incremental
-  * grid must converge to the batch sketch's estimates exactly, at any
-  * micro-batch chunking (increments commute).
+/** The incremental CMS grid must converge to the batch sketch's estimates
+  * exactly, at any micro-batch chunking (increments commute).
   */
 class StreamingCmsSpec extends SparkSpec {
   import spark.implicits._
@@ -17,7 +14,7 @@ class StreamingCmsSpec extends SparkSpec {
     val batch = Sketches.cmsUserTypeCounts(spark, dir)
       .collect().map(_.toSeq).toSeq
     Seq(1, 3).foreach { chunks =>
-      val streamed = StreamingCms.cmsUserTypeCounts(spark, dir, chunks)
+      val streamed = StreamingCms.cmsUserTypeCountsFromFiles(spark, dir, chunks)
         .collect().map(_.toSeq).toSeq
       assert(streamed == batch, s"chunks=$chunks")
     }

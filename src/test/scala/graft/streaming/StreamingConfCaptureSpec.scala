@@ -6,12 +6,12 @@ import graft.SparkSpec
 
 /** The streaming drivers size their stateful shuffle to the keyspace by
   * setting `spark.sql.shuffle.partitions` around `start()` and restoring the
-  * session default immediately after (StreamingHistory / StreamingSketch /
-  * StreamingDedup). That pattern relies on one Spark contract: the query
-  * clones the session AT START, so the width the state store runs with is
-  * the conf at `start()` — the restore cannot race first-batch planning,
-  * which happens later on the clone. This spec pins the contract (the
-  * round-8 review questioned exactly this capture order).
+  * session default immediately after (ReplayHarness.runWithStatePartitions,
+  * under every file-replay twin). That pattern relies on one Spark
+  * contract: the query clones the session AT START, so the width the state
+  * store runs with is the conf at `start()` — the restore cannot race
+  * first-batch planning, which happens later on the clone. This spec pins
+  * that capture order against Spark upgrades.
   */
 class StreamingConfCaptureSpec extends SparkSpec {
   import spark.implicits._

@@ -47,7 +47,7 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("driver query: survivor key set equals the batch exact-dedup key set") {
-    val streamed = StreamingDedup.exactWithinHorizon(spark, sf0001)
+    val streamed = StreamingDedup.exactWithinHorizonFromFiles(spark, sf0001)
       .as[String].collect().toSeq
     val batch = graft.operators.Dedup
       .exact(graft.sources.Tables.documents(spark, sf0001))
@@ -82,7 +82,7 @@ class StreamingDedupSpec extends SparkSpec {
   }
 
   test("driver query: survivor key set equals the batch canonical key set") {
-    val streamed = StreamingDedup.normalizedWithinHorizon(spark, sf0001)
+    val streamed = StreamingDedup.normalizedWithinHorizonFromFiles(spark, sf0001)
       .as[String].collect().toSeq
     val batch = graft.operators.Dedup
       .normalizedDups(graft.operators.Dedup.normProbeAugmented(

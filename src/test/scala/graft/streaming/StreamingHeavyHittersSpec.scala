@@ -14,7 +14,7 @@ class StreamingHeavyHittersSpec extends SparkSpec {
     val batch = HeavyHitters.hotCustomers(spark, dir)
       .as[(Int, Long, Long, Long)].collect().toSeq
     Seq(1, 4).foreach { chunks =>
-      val streamed = StreamingHeavyHitters.hotCustomers(spark, dir, chunks)
+      val streamed = FileReplayHeavyHitters.hotCustomers(spark, dir, chunks)
         .as[(Int, Long, Long, Long)].collect().toSeq
       assert(streamed == batch, s"chunks=$chunks")
     }

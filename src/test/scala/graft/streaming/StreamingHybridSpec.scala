@@ -1,5 +1,9 @@
 package graft.streaming
 
+import scala.concurrent.TimeoutException
+import scala.concurrent.duration.DurationInt
+
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -26,5 +30,32 @@ class StreamingHybridSpec extends SparkSpec {
         .collect().map(_.toSeq).toSeq
       assert(streamed == batch, s"chunks=$chunks")
     }
+  }
+
+  test("a failed or timed-out leg stops both legs' streams before rethrowing") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    // a leg whose stream never finishes on its own: it returns only once
+    // something stops its query
+    def wedged(): Int = {
+      val q = MemoryStream[Int].toDF().writeStream.format("noop").start()
+      q.awaitTermination()
+      0
+    }
+    val failed = intercept[IllegalStateException] {
+      StreamingHybrid.bothLegs(spark, 1.minute)(
+        { // fail only once the other leg's stream is running
+          while (spark.streams.active.isEmpty) Thread.sleep(10)
+          throw new IllegalStateException("leg failed")
+        },
+        wedged())
+    }
+    assert(failed.getMessage == "leg failed")
+    assert(spark.streams.active.isEmpty)
+
+    intercept[TimeoutException] {
+      StreamingHybrid.bothLegs(spark, 5.seconds)(wedged(), wedged())
+    }
+    assert(spark.streams.active.isEmpty)
   }
 }

@@ -8,6 +8,9 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.Sketches
 
+/** One pre-binned observation of the hand-fed restart fixture. */
+final case class BinHit(event_type: String, bin: Long)
+
 /** Incremental histogram quantiles: the streaming twin must equal the batch
   * sketch exactly, for any micro-batch split of the same rows — and the
   * counter state must survive a checkpoint restart (the ST1 delivery
@@ -22,7 +25,7 @@ class StreamingQuantilesSpec extends SparkSpec {
       .orderBy($"event_type")
       .as[(String, Long, Double, Double, Double)].collect().toSeq
     Seq(1, 3, 7).foreach { chunks =>
-      val streamed = StreamingQuantiles.quantilesByType(spark, dir, chunks)
+      val streamed = StreamingQuantiles.quantilesByTypeFromFiles(spark, dir, chunks)
         .as[(String, Long, Double, Double, Double)].collect().toSeq
       assert(streamed == batch, s"chunks=$chunks")
     }

@@ -8,6 +8,9 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.Relational
 
+/** One event of the hand-fed sessionizer fixtures. */
+final case class EventArrival(ts: Timestamp, user_id: Long)
+
 /** The streaming sessionizer's driver-query contract: incremental execution
   * over micro-batches produces EXACTLY the batch session_window result
   * (SessionWindowStreamingSpec covers the merging/watermark semantics at
@@ -17,7 +20,7 @@ class StreamingSessionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("replayed streaming sessions equal the batch session_window result") {
-    val streamed = StreamingSessions.userSessions(spark, sf0001, chunks = 4)
+    val streamed = FileReplaySessions.userSessions(spark, sf0001, chunks = 4)
       .collect().map(_.toSeq)
     val batch = Relational.sessionWindows(spark, sf0001)
       .collect().map(_.toSeq)

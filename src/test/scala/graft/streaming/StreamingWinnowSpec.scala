@@ -15,19 +15,19 @@ class StreamingWinnowSpec extends SparkSpec {
 
   test("known-passage documents emit nothing; novel passages emit their new fps") {
     implicit val ctx = spark.sqlContext
-    val input = MemoryStream[DocArrival]
+    val input = MemoryStream[StreamDoc]
     val q = StreamingWinnow.novelPassages(input.toDF(), horizon = "1 hour")
       .writeStream.format("memory").queryName("winnow_novel")
       .outputMode("append").start()
     try {
       val passage = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
-      input.addData(Seq(DocArrival(ts(0), 1L, passage)))
+      input.addData(Seq(StreamDoc(ts(0), 1L, passage)))
       q.processAllAvailable()
       val afterFirst = spark.table("winnow_novel").count()
       assert(afterFirst > 0) // the first doc's passages are all novel
 
       // an exact re-arrival (shifted position would match too) adds NOTHING
-      input.addData(Seq(DocArrival(ts(10), 2L, s"pre1 pre2 pre3 $passage")))
+      input.addData(Seq(StreamDoc(ts(10), 2L, s"pre1 pre2 pre3 $passage")))
       q.processAllAvailable()
       val afterDup = spark.table("winnow_novel").count()
       // the prefix itself is under k+w-1 words beyond the passage overlap,
@@ -37,7 +37,7 @@ class StreamingWinnowSpec extends SparkSpec {
       assert(dupFps.distinct.length == dupFps.length, "a fingerprint re-emitted")
 
       // a genuinely novel passage emits new fingerprints
-      input.addData(Seq(DocArrival(ts(20), 3L,
+      input.addData(Seq(StreamDoc(ts(20), 3L,
         "kilo lima mike november oscar papa quebec romeo sierra tango")))
       q.processAllAvailable()
       assert(spark.table("winnow_novel").count() > afterDup)

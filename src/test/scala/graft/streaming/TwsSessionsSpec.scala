@@ -8,6 +8,10 @@ import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 import graft.operators.Relational
 
+/** One finalized session read back from the memory sink. */
+final case class SessionOut(user_id: Long, session_start: Timestamp,
+    session_end: Timestamp, n_events: Long)
+
 /** The merging-window class on `transformWithState` (ListState + event-time
   * timers, RocksDB): unit-pins the merge fold's boundary semantics, then
   * certifies the timer-driven processor end-to-end — cross-batch merging on
