@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Cumulative stop-the-world GC seconds across all collectors — sampled
     * around each query so the JSON attributes session-level JVM pressure
@@ -12,41 +11,10 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // between-query hygiene: a 63-query single-session run accumulates heap
-    // junk (superseded cache blocks awaiting ContextCleaner, codegen classes,
-    // streaming sink/state leftovers) whose GC tax otherwise lands on
-    // whichever later query triggers collection — measured in round 9 as a
-    // ~0.5x total inflation with per-query attribution flipping run-to-run.
-    // Clearing caches and collecting BETWEEN queries moves that tax off the
-    // measured windows so each number is the operator, not its predecessors.
-    val hygiene = sys.env.getOrElse("SPARK_GRAFT_BENCH_HYGIENE", "1") == "1"
-    // comma-separated query-name filter for solo profiling runs (not used by
-    // the driver, which benches the full suite)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Codegen-class cache sized to the suite instead of the 100-entry
-      // default. Measured (round 21, TwinProfile): a single heavy query
-      // (ann_ivf_pq_res_trained) compiles 118 codegen units, so the LRU
-      // default evicts its own entries mid-query — its SECOND run
-      // recompiled 119 units (zero hits); with a 10k cache the rerun
-      // recompiles 0 and shared trunk subplans hit ACROSS queries
-      // (ann_ivf_pq_rerank round 1: 126 -> 28 compiles). Each miss is a
-      // ~20-100 ms Janino compile on the hot path; a 272-query session
-      // (and every streaming twin's per-batch replan) pays it
-      // repeatedly. Cost is bounded generated-class memory; the knob is
-      // core-count- and scale-independent (any long-lived session
-      // serving many distinct queries wants the cache sized to its
-      // workload, not to 100).
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val only = SparkEntry.onlyFromEnv
+    val selected = SparkEntry.select(only)
+    val spark = Session.local(cpus)
     // Measure with the noop sink: every column materializes and top-level
     // sorts execute, unlike count() where Catalyst prunes computed columns
     // and eliminates the sort under the count aggregate (a narrow query
@@ -79,12 +47,17 @@ object Bench {
       try spark.catalog.dropTempView("bench_warmup") catch { case _: Exception => () }
     } catch { case _: Exception => () }
     val errors = scala.collection.mutable.ListBuffer.empty[String]
-    val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
     val results = selected.map { case (name, fn) =>
-      if (hygiene) {
-        spark.catalog.clearCache()
-        System.gc()
-      }
+      // between-query hygiene: a 63-query single-session run accumulates
+      // heap junk (superseded cache blocks awaiting ContextCleaner, codegen
+      // classes, streaming sink/state leftovers) whose GC tax otherwise
+      // lands on whichever later query triggers collection — measured in
+      // round 9 as a ~0.5x total inflation with per-query attribution
+      // flipping run-to-run. Clearing caches and collecting BETWEEN queries
+      // moves that tax off the measured windows so each number is the
+      // operator, not its predecessors.
+      spark.catalog.clearCache()
+      System.gc()
       val g0 = gcSeconds()
       val t0 = System.nanoTime()
       // a failed query must not masquerade as a fast one — record it

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{DotProduct, KmvSketch, MqttTopicMatches, RepetitionStats, ShingleHash60, SquaredDistance, TokenPositions, TopKAgg, WinnowFingerprints}
 
 /** SQL surface for graft's native Catalyst expressions
-  * (`spark.sql.extensions=graft.GraftExtensions`, or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`):
+  * (`spark.sql.extensions=graft.GraftExtensions`, or a builder's
+  * `withExtensions(new GraftExtensions)`, as [[Session.local]] does):
   *
   *  - `mqtt_topic_matches(topic, filter)` — MQTT `+`/`#` subscription
   *    matching (the reference's broker-side filter, usable in WHERE);

@@ -998,6 +998,27 @@ object SparkEntry {
       .orderBy(col("doc_id"), col("dim")))
   )
 
+  /** `SPARK_GRAFT_ONLY`: the comma-separated query names a solo run of
+    * Bench or Verify is restricted to (unset: every query runs).
+    */
+  def onlyFromEnv: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
+  /** The `queries` entries a run executes: all of them, or the named
+    * subset. A name that is not a query fails the run — a typo would
+    * otherwise select nothing and report a vacuously clean, zero-second run.
+    */
+  def select(only: Option[Set[String]]): Map[String, (SparkSession, String) => DataFrame] =
+    only match {
+      case None => queries
+      case Some(names) =>
+        val unknown = names -- queries.keySet
+        require(unknown.isEmpty, "SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
+          unknown.toSeq.sorted.mkString(", "))
+        require(names.nonEmpty, "SPARK_GRAFT_ONLY selects no query")
+        queries.filter { case (n, _) => names(n) }
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Every query is oracle-checked in full.
     */

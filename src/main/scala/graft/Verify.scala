@@ -1,43 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet is TIMESTAMP(NANOS); read as long, Tables.events converts
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // write timestamps as INT64 micros (same physical form DuckDB emits)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // suite-sized codegen-class cache — see the measured rationale in
-      // Bench.scala (the 100-entry default recompiles shared subplans
-      // across the 272-query session)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val only = SparkEntry.onlyFromEnv
+    val selected = SparkEntry.select(only)
+    val spark = Session.local(cpus)
     new java.io.File(outDir).mkdirs()
-    // builder-side subset runs (same contract as Bench's SPARK_GRAFT_ONLY):
-    // comma-separated query names; the driver never sets this
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name would otherwise produce an empty (vacuously clean)
-    // subset run — fail fast instead
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

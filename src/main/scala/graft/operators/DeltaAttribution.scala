@@ -52,19 +52,6 @@ object DeltaAttribution {
   val PermutedResidue = 7L
   val PermutedOffset = 9000000L
 
-  /** Run two independent cache-materialization jobs concurrently and wait
-    * for both (failure of either propagates).
-    */
-  private def overlap(a: => Unit, b: => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fa = Future(a)
-    val fb = Future(b)
-    Await.result(fa, Duration.Inf)
-    Await.result(fb, Duration.Inf)
-  }
-
   /** The attribution's probe set: the SAME recrawl delta every delta
     * screen probes ([[DedupDelta.deltaDocs]]) plus the token-permuted
     * family.
@@ -89,11 +76,10 @@ object DeltaAttribution {
     // concurrently — lazily-persisted partitions race and every branch
     // recomputes the parse (measured: 21.9 s lazy -> 8.4 s eager at
     // sf0.1; eager materialization pins each trunk to ONE computation).
-    // The two counts of each pair are INDEPENDENT jobs — overlap them
-    // (r22, guide's overlap-independent-jobs rule) so the four sequential
-    // job latencies collapse to two; the second pair stays after the
-    // first because the shingle-set trunks read the doc caches.
-    overlap(old.count(), probes.count())
+    // The counts run one after the other: overlapping each pair's two
+    // independent jobs measured no gain (r22: 5.89 -> 5.91 s).
+    old.count()
+    probes.count()
     // exact: frozen content-hash membership (the dedup family's ONE
     // content-hash spelling; the old side collapses to a distinct hash set)
     val oldHashes = old.select(Dedup.contentHash(col("text")).as("__h"))
@@ -104,7 +90,8 @@ object DeltaAttribution {
     // near-dup stages: each certified probe screen, collapsed to doc_id
     val oldSets = Caching.cached(Dedup.hashedShingleSets(old))
     val probeSets = Caching.cached(Dedup.hashedShingleSets(probes))
-    overlap(oldSets.count(), probeSets.count())
+    oldSets.count()
+    probeSets.count()
     val mh = DedupDelta.probePairs(oldSets, probeSets)
       .select(col("doc_id")).distinct().withColumn("__mh", lit(true))
     val sh = DedupDelta.simhashProbePairs(old, probes)

@@ -20,11 +20,10 @@ import graft.functions.MqttTopicMatches
 /** DataSource V2 streaming MQTT source (SURVEY §2.1 S1).
   *
   * The reference subscribes a paho client to N topic filters and processes
-  * messages via callbacks (/root/reference/mqtt2sql.py:737-787). Here the
-  * driver-side client buffers received messages into [[MqttBroker]] (an
-  * in-process stand-in for the network client — the seam where a real
-  * paho-equivalent would sit, since this container has no broker), and the
-  * engine consumes them through real MicroBatchStream mechanics:
+  * messages via callbacks (mqtt2sql.py:737-787). Here the driver-side
+  * [[MqttClient]], speaking MQTT over a [[SocketMqttTransport]], buffers
+  * received messages into [[MqttBroker]], and the engine consumes them
+  * through real MicroBatchStream mechanics:
   *
   *  - offsets = absolute receive positions; each trigger drains [start, end)
   *    exactly once, checkpointable and replayable — already a delivery
@@ -70,10 +69,11 @@ object MqttSchema {
     StructField("retain", IntegerType, nullable = false)))
 }
 
-/** In-process receive buffer: the stand-in for the driver-side network
-  * client. `publish` is what the paho on_message callback would do.
-  * Positions are absolute (never reset by trimming): `base` counts messages
-  * already trimmed away, `base + buf.size` is the high-water mark.
+/** In-process receive buffer on the driver, fed by [[MqttClient]] over a
+  * [[SocketMqttTransport]]: `publish` is its on-message callback (the
+  * reference's paho on_message). Positions are absolute (never reset by
+  * trimming): `base` counts messages already trimmed away,
+  * `base + buf.size` is the high-water mark.
   */
 object MqttBroker {
   final case class Received(msgId: Long, tsMicros: Long, topic: String,

@@ -60,7 +60,7 @@ object StreamStreamJoin {
       .filter(col("event_type").isin("signup", "purchase"))
 
   /** ONE staged log per (dir, chunks, input fingerprint) per JVM, shared by
-    * the inner and outer forms: r14's SsjProfile showed per-pair fixed cost
+    * the inner and outer forms: r14's profiling showed per-pair fixed cost
     * dominated by the DUPLICATED staging write + max-ts scan, so the pair
     * now stages once (sentinel included — see below) and replays twice. The
     * sentinel rows are harmless to the inner form (their user ids differ,

@@ -70,33 +70,19 @@ object TwsCdc {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Runs `body` (which must START the streaming query — conf is captured
-    * per query at start) with the RocksDB session confs set, restoring the
-    * previous values afterwards. Beyond the provider itself this enables
-    * changelog checkpointing when `SPARK_GRAFT_ROCKSDB_CHANGELOG=true`:
-    * each commit then uploads the batch's CHANGELOG instead of a full
-    * RocksDB snapshot (snapshots still happen, async and less often),
-    * which takes snapshot writes off the per-batch commit path — the cost
-    * that grows with STATE size, the thing a 100 TB deployment has most
-    * of, and the setting such a deployment should run. The LOCAL default
-    * is `false`: at test scale state is tiny, full snapshots are already
-    * cheap, and the measured effect of changelog mode here is a small
-    * LOSS (r22 interleaved A/B over the five RocksDB queries, best-of-3
-    * at 32 cpus/sf0.1: ON 21.70 s vs OFF 21.08 s = 1.030x — the changelog
-    * write + maintenance thread is pure overhead when snapshots cost
-    * nothing), so defaulting it on would trade real local bench seconds
-    * for a benefit that only exists at scale.
+    * per query at start) with the RocksDB provider set, restoring the
+    * previous value afterwards. Changelog checkpointing stays at Spark's
+    * default (off): at test scale full snapshots are cheap and changelog
+    * mode measured 1.030x slower (r22 A/B over the five RocksDB queries).
     */
   def withRocksDb[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "false"))
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, RocksDbProvider)
     try body
-    finally prev.foreach {
-      case (k, Some(p)) => spark.conf.set(k, p)
-      case (k, None) => spark.conf.unset(k)
+    finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
     }
   }
 

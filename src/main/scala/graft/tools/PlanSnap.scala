@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` for the named driver-contract queries to
   * `<outDir>/<query>_<tag>.txt` — the per-query before/after plan artifact
   * the optimization rounds commit under plans/r{N}/ (DumpPlans writes the
@@ -26,14 +24,7 @@ object PlanSnap {
     val outDir = args(0)
     val tag = args(1)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(4)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       if (!force && graft.SparkEntry.eagerQueries.contains(name)) {

@@ -1,28 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The SQL function surface injected by [[GraftExtensions]]: a SQL-only user
   * gets the engine's native expressions with identical semantics (and the
   * same codegen'd plans) as the Column API.
   */
-class GraftExtensionsSpec extends AnyFunSuite {
-
-  // a dedicated session over the shared context, built WITH the extension
-  // (other suites' sessions are untouched — extensions bind per session)
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
+class GraftExtensionsSpec extends SparkSpec {
 
   test("mqtt_topic_matches is callable from SQL with MQTT wildcard semantics") {
     import spark.implicits._

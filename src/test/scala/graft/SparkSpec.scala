@@ -3,24 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session base: one local session per suite, config matching the
-  * driver contract (UTC, small shuffle partitions, nanos-as-long reads).
-  *
-  * The session carries [[GraftExtensions]] so SQL-surface tests (e.g.
-  * `top_k_pairs` in BoundedTopKSpec) resolve the registered functions no
-  * matter which suite's `getOrCreate` wins the race to build the shared
-  * session — without this, such tests pass only when GraftExtensionsSpec's
-  * extension-bearing session happens to be built first (order-dependent).
+/** Shared session base: one local session per suite, built by the engine's
+  * one factory ([[Session.local]]) on 4 cores — the same confs Bench and
+  * Verify run with, including [[GraftExtensions]], so SQL-surface tests
+  * (e.g. `top_k_pairs` in BoundedTopKSpec) resolve the registered functions
+  * no matter which suite's `getOrCreate` builds the shared session.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   def sf0001 = "/root/testdata/sf0.001"
 }

@@ -54,14 +54,8 @@ class FileReplayTwinsSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("session_start").cast("timestamp_ntz"))
       .withColumn("session_end",
         org.apache.spark.sql.functions.col("session_end").cast("timestamp_ntz")))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, TwsCdc.RocksDbProvider)
+    TwsCdc.withRocksDb(spark) {
       assert(rows(FileReplaySessions.userSessions(spark, sf0001)) == batch)
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
   }
 

@@ -183,16 +183,10 @@ class FileReplayUpdateRestartSpec extends SparkSpec {
   test("sketch restart ON the RocksDB provider: recovery loads the RocksDB " +
       "snapshot/changelog, not the HDFS-backed delta path") {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    val emissions = try {
-      spark.conf.set(key, TwsCdc.RocksDbProvider)
+    val emissions = TwsCdc.withRocksDb(spark) {
       crashAndResume(
         StreamingSketch.bucketHits(spark, sf0001), "bucket", "update",
         "sketch_restart_rocks")(df => StreamingSketch.counts(df.as[BucketHit]).toDF())
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
     assert(emissions.select(max(col("batch_id"))).head().getLong(0) == 2L)
     assert(rows(StreamingSketch.foldEmissions(emissions))

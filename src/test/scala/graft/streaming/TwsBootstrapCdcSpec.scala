@@ -22,17 +22,6 @@ class TwsBootstrapCdcSpec extends SparkSpec {
   private def msg(id: Long, t: Long, topic: String, v: String) =
     MqttMsg(id, ts(t), topic, v.getBytes("UTF-8"), 0, 0)
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, TwsCdc.RocksDbProvider)
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("bootstrapped state suppresses a tail message equal to the head's " +
       "last payload; a fresh-state control re-emits it") {
     implicit val ctx = spark.sqlContext
@@ -42,7 +31,7 @@ class TwsBootstrapCdcSpec extends SparkSpec {
       TopicLast("u", "q".getBytes("UTF-8"))).toDS()
     val tail = Seq(msg(10, 20, "t", "a"), msg(11, 21, "u", "r"),
       msg(12, 22, "v", "x"))
-    def run(bootstrap: Boolean): Set[Long] = withRocksDb {
+    def run(bootstrap: Boolean): Set[Long] = TwsCdc.withRocksDb(spark) {
       val name = s"handoff_spec_${if (bootstrap) "b" else "f"}"
       val input = MemoryStream[MqttMsg]
       val cdc = if (bootstrap) TwsBootstrapCdc.changesFrom(input.toDS(), snapshot)
@@ -94,7 +83,7 @@ class TwsBootstrapCdcSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.{Dataset, Row}
     val work = java.nio.file.Files.createTempDirectory("handoff_restart").toFile
-    withRocksDb {
+    TwsCdc.withRocksDb(spark) {
       try {
         val snapshot = Seq(TopicLast("t", "a".getBytes("UTF-8"))).toDS()
         val batches = Seq(Seq(msg(20, 30, "t", "b")), Seq(msg(21, 31, "t", "a")))

@@ -18,20 +18,9 @@ class TwsCdcSpec extends SparkSpec {
   private def msg(id: Long, t: Long, topic: String, v: String) =
     MqttMsg(id, ts(t), topic, v.getBytes("UTF-8"), 0, 0)
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, TwsCdc.RocksDbProvider)
-    try body
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("transformWithState CDC equals the batch lag-window replay") {
     implicit val ctx = spark.sqlContext
-    withRocksDb {
+    TwsCdc.withRocksDb(spark) {
       val input = MemoryStream[MqttMsg]
       val q = TwsCdc.changes(input.toDS())
         .writeStream.format("memory").queryName("tws_cdc_eq")
@@ -53,7 +42,7 @@ class TwsCdcSpec extends SparkSpec {
   test("state TTL bounds the topic keyspace: an expired topic's next " +
       "message re-emits (at-least-once), an unexpired one still suppresses") {
     implicit val ctx = spark.sqlContext
-    withRocksDb {
+    TwsCdc.withRocksDb(spark) {
       val input = MemoryStream[MqttMsg]
       // ProcessingTime mode schedules micro-batches continuously for TTL
       // cleanup, so processAllAvailable can starve at the default 0 ms

@@ -22,16 +22,13 @@ class TwsHeavyHittersSpec extends SparkSpec {
   test("MapState write-back reproduces the mgFold counters across batches, " +
       "including decrement-all evictions at capacity") {
     implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
     val name = "tws_mg_stream"
     // capacity 2 forces the decrement/removeKey path; one group and one
     // state partition make the cross-batch fold order deterministic, so the
     // streamed counters must equal a direct fold of the concatenated input
     val batch1 = Seq(1L, 1L, 2L, 3L, 1L)
     val batch2 = Seq(4L, 4L, 1L, 5L, 4L)
-    try {
-      spark.conf.set(key, TwsCdc.RocksDbProvider)
+    TwsCdc.withRocksDb(spark) {
       val input = MemoryStream[Long]
       val q = ReplayHarness.runWithStatePartitions(spark, 1) {
         TwsHeavyHitters.summaryStream(input.toDS(), groups = 1, capacity = 2)
@@ -53,9 +50,6 @@ class TwsHeavyHittersSpec extends SparkSpec {
         q.stop()
         try spark.catalog.dropTempView(name) catch { case _: Exception => () }
       }
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
   }
 

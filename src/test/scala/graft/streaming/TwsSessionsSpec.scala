@@ -66,11 +66,8 @@ class TwsSessionsSpec extends SparkSpec {
       "sessions merge across micro-batches (MemoryStream, RocksDB)") {
     implicit val ctx = spark.sqlContext
     def at(hhmm: String) = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
     val name = "tws_sess_stream"
-    try {
-      spark.conf.set(key, TwsCdc.RocksDbProvider)
+    TwsCdc.withRocksDb(spark) {
       val input = MemoryStream[EventArrival]
       val q = TwsSessions.sessions(input.toDF())
         .writeStream.format("memory").queryName(name)
@@ -101,9 +98,6 @@ class TwsSessionsSpec extends SparkSpec {
         q.stop()
         try spark.catalog.dropTempView(name) catch { case _: Exception => () }
       }
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -132,10 +126,7 @@ class TwsSessionsSpec extends SparkSpec {
     // restored together.
     import org.apache.spark.sql.streaming.Trigger
     val work = java.nio.file.Files.createTempDirectory("tws_sess_restart").toFile
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, TwsCdc.RocksDbProvider)
+    try TwsCdc.withRocksDb(spark) {
       val staged = graft.sources.Tables.events(spark, sf0001)
         .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
           col("user_id"))
@@ -190,12 +181,6 @@ class TwsSessionsSpec extends SparkSpec {
         .withColumn("session_end", col("session_end").cast("timestamp_ntz")))
       assert(got.toSet == batch.toSet)
       assert(got.size == batch.size, "duplicated emissions after restart")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(work)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(work)
   }
 }

@@ -27,22 +27,10 @@ class UpdateModeRocksDbSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq
 
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, TwsCdc.RocksDbProvider)
-      body
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("linear-counting sketch file twin on RocksDB equals the batch sketch") {
     val batch = rows(Sketches.approxDistinctUsers(spark, sf0001))
     assert(batch.nonEmpty)
-    withRocksDb {
+    TwsCdc.withRocksDb(spark) {
       assert(rows(StreamingSketch.approxDistinctUsersFromFiles(spark, sf0001))
         == batch)
     }
@@ -52,7 +40,7 @@ class UpdateModeRocksDbSpec extends SparkSpec {
       "batch sketch") {
     val batch = rows(Sketches.kmvDistinctUsers(spark, sf0001))
     assert(batch.nonEmpty)
-    withRocksDb {
+    TwsCdc.withRocksDb(spark) {
       assert(rows(StreamingKmv.kmvDistinctUsersFromFiles(spark, sf0001))
         == batch)
     }
@@ -62,7 +50,7 @@ class UpdateModeRocksDbSpec extends SparkSpec {
       "profile") {
     val batch = rows(HeavyHitters.hotCustomers(spark, sf0001))
     assert(batch.nonEmpty)
-    withRocksDb {
+    TwsCdc.withRocksDb(spark) {
       assert(rows(StreamingBoundedHeavyHitters.hotCustomersFromFiles(spark, sf0001))
         == batch)
     }
@@ -72,7 +60,7 @@ class UpdateModeRocksDbSpec extends SparkSpec {
       "equals the batch sample") {
     val batch = rows(BoundedTopK.sampleDocsPerLang(spark, sf0001))
     assert(batch.nonEmpty)
-    withRocksDb {
+    TwsCdc.withRocksDb(spark) {
       assert(rows(StreamingGroupSample.sampleDocsPerLangFromFiles(spark, sf0001))
         == batch)
     }
@@ -84,7 +72,7 @@ class UpdateModeRocksDbSpec extends SparkSpec {
       graft.sources.Tables.embeddings(spark, sf0001))
       .orderBy(col("cid"), col("pos")))
     assert(batch.nonEmpty)
-    withRocksDb {
+    TwsCdc.withRocksDb(spark) {
       assert(rows(StreamingKmeans.lloydStepFromFiles(spark, sf0001)) == batch)
     }
   }
