@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -76,10 +76,10 @@ object StreamingState {
         org.apache.spark.sql.types.IntegerType),
       org.apache.spark.sql.types.StructField("retain",
         org.apache.spark.sql.types.IntegerType)))
-    val rows = spark.read.parquet(statePath)
-      .withColumn("ts", col("ts").cast("timestamp_ntz"))
-      .select(col("topic"), col("ts"), col("value"), col("qos"), col("retain"))
-      .collect()
+    val rows = UpsertSink.readState(spark, statePath).fold(Array.empty[Row])(
+      _.withColumn("ts", col("ts").cast("timestamp_ntz"))
+        .select(col("topic"), col("ts"), col("value"), col("qos"), col("retain"))
+        .collect())
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 

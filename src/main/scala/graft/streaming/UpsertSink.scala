@@ -1,10 +1,14 @@
 package graft.streaming
 
+import java.io.{FileNotFoundException, IOException}
+import java.nio.charset.StandardCharsets
 import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The reference's keyed upsert sink (`INSERT ... ON DUPLICATE KEY UPDATE`,
   * /root/reference/mqtt2sql.py:579-629, PK=topic mysql.sql:51) in two
@@ -19,9 +23,11 @@ import org.apache.spark.sql.functions._
   *    JDBC engine shipped with Spark); the SQL is standard `MERGE`
   *    (MySQL 8 / Derby 10.11+ / Postgres 15).
   *  - [[merge]] — file-based stand-in for environments without a
-  *    transactional store: keyed merge over parquet, full-rewrite per batch
+  *    transactional store: keyed merge over parquet that publishes one
+  *    immutable, snapshot-isolated state version per batch in one Spark job
   *    (documented O(total state) IO — fine for dimension-sized state, wrong
-  *    for big state; that's what mergeJdbc/Delta are for).
+  *    for big state; that's what mergeJdbc/Delta are for). Read it only
+  *    through [[readState]].
   *
   * Both are idempotent per key: replaying a micro-batch after a checkpoint
   * restart converges to the same state. Checkpointed offsets + an idempotent
@@ -84,41 +90,111 @@ object UpsertSink {
   }
 
   /** Merge one micro-batch into the keyed parquet state at `statePath`
-    * (file-based stand-in; see class doc for the scale boundary).
+    * (file-based stand-in; see the object doc for the scale boundary).
     * Usage: `stream.writeStream.foreachBatch(UpsertSink.merge(path) _)`.
     *
-    * Parquet has no transactional MERGE, so publishing is
-    * write-tmp -> retire-current -> rename-tmp; a crash between the renames
-    * leaves the previous state recoverable at `_prev` (readState falls back),
-    * never a window where both copies are gone.
+    * The state is a sequence of immutable versions `<statePath>/_v<batchId>`.
+    * Batch `N` publishes one:
+    *
+    *  1. if `_v<N>` already exists the batch is a checkpoint replay of a
+    *     published batch, and nothing happens;
+    *  1. `lastPerKey(newest version ∪ batch)` runs as ONE Spark job: the
+    *     newest version is read with its stored schema (no inference job),
+    *     and `coalesce(1)` before the window leaves the plan one stage with
+    *     no exchange. The state is topic-sized (500 topics are 7 KB), so a
+    *     batch's cost is that job's fixed cost, not its bytes;
+    *  1. the job writes `_tmp_v<N>` (v2 committer, no `_SUCCESS`), the
+    *     schema goes beside the data, and one directory rename publishes
+    *     `_v<N>`. A crash before the rename leaves the last published
+    *     version current, and the replay of `N` overwrites the leftover;
+    *  1. every version whose successor was published more than
+    *     [[GraceMs]] ago is deleted. The newest version has no successor
+    *     and always stays.
+    *
+    * Readers ([[readState]]) resolve the newest version once and scan
+    * files nobody renames or deletes under them, so they never coordinate
+    * with the writer; only a scan older than [[GraceMs]] may fail. The `_`
+    * prefix hides the versions from a bare `spark.read.parquet(statePath)`,
+    * so a reader that bypasses [[readState]] fails loudly instead of reading
+    * every version at once.
+    *
+    * Delta files with periodic compaction would make a batch O(batch)
+    * bytes, but at this state size the cost is per job, not per byte, and
+    * deltas would add a dedup window to every read and a second code path.
+    * They wait for a workload with large state.
     */
   def merge(statePath: String)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val batchLast = lastPerKey(batch)
-    val existing = readState(spark, statePath).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batchLast.schema))
-    val merged = lastPerKey(existing.unionByName(batchLast))
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(statePath)
-    val tmp = new org.apache.hadoop.fs.Path(statePath + s"_tmp_$batchId")
-    val prev = new org.apache.hadoop.fs.Path(statePath + "_prev")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(prev, true)
-    if (fs.exists(dst)) fs.rename(dst, prev)
-    fs.rename(tmp, dst)
-    fs.delete(prev, true)
+    val root = new Path(statePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val published = versions(fs, root)
+    if (published.exists(_._1 == batchId)) return
+    val newest = published.lastOption
+    if (newest.exists(_._1 > batchId))
+      throw new IllegalStateException(s"$statePath holds version ${newest.get._1}, " +
+        s"newer than batch $batchId: a state directory serves one checkpoint")
+    val all = newest.fold(batch) { case (_, v) =>
+      readVersion(spark, fs, v.getPath).unionByName(batch)
+    }
+    val merged = lastPerKey(all.coalesce(1))
+    val tmp = new Path(root, s"_tmp_v$batchId")
+    fs.delete(tmp, true)
+    merged.write
+      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(tmp.toString)
+    val out = fs.create(new Path(tmp, SchemaFile))
+    try out.write(merged.schema.json.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    if (!fs.rename(tmp, new Path(root, s"_v$batchId")))
+      throw new IOException(s"could not publish $tmp as version $batchId")
+    prune(fs, root, System.currentTimeMillis())
   }
 
-  /** Current state, falling back to the `_prev` copy if a crash interrupted
-    * the publish dance mid-rename.
+  /** The newest published state version, or `None` when no version exists.
+    * Resolves the version with one directory listing and reads its files
+    * with the stored schema, so it starts no Spark job; any other failure
+    * propagates.
     */
-  def readState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] =
-    try Some(spark.read.parquet(statePath))
-    catch {
-      case _: Exception =>
-        try Some(spark.read.parquet(statePath + "_prev"))
-        catch { case _: Exception => None }
-    }
+  def readState(spark: SparkSession, statePath: String): Option[DataFrame] = {
+    val root = new Path(statePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    versions(fs, root).lastOption.map { case (_, v) => readVersion(spark, fs, v.getPath) }
+  }
+
+  /** How long a superseded version outlives its successor's publish: the
+    * longest scan [[readState]] guarantees. Tens of seconds covers every
+    * reader here (a dashboard read takes ~0.2 s) while keeping only the
+    * versions of the last few dozen batches on disk.
+    */
+  private[streaming] val GraceMs = 30000L
+
+  private val Version = "_v(\\d+)".r
+  private val SchemaFile = "_schema.json"
+
+  /** Published versions under `root` by batch id, oldest first. */
+  private def versions(fs: FileSystem, root: Path): Seq[(Long, FileStatus)] =
+    try fs.listStatus(root).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case Version(id) => Some(id.toLong -> st)
+        case _ => None
+      }
+    }.sortBy(_._1)
+    catch { case _: FileNotFoundException => Nil }
+
+  private def readVersion(spark: SparkSession, fs: FileSystem, dir: Path): DataFrame = {
+    val in = fs.open(new Path(dir, SchemaFile))
+    val schema = try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+    spark.read.schema(DataType.fromJson(schema).asInstanceOf[StructType]).parquet(dir.toString)
+  }
+
+  /** Delete every version whose successor was published more than
+    * [[GraceMs]] before `nowMs` (a directory's modification time is its
+    * publish time: the schema file is its last entry).
+    */
+  private[streaming] def prune(fs: FileSystem, root: Path, nowMs: Long): Unit = {
+    val vs = versions(fs, root).map(_._2)
+    for ((old, next) <- vs.zip(vs.drop(1)) if nowMs - next.getModificationTime > GraceMs)
+      fs.delete(old.getPath, true)
+  }
 }

@@ -95,7 +95,7 @@ class UpsertSinkSpec extends SparkSpec {
     val b2 = Seq(msg(3, 12, "t", "b"), msg(4, 13, "w", "n"))
     Seq(b1, b2).foreach { b => input.addData(b); q.processAllAvailable() }
     q.stop()
-    val got = spark.read.parquet(statePath)
+    val got = UpsertSink.readState(spark, statePath).get
       .select($"topic", $"value".cast("string")).as[(String, String)].collect().toSet
     val all = (b1 ++ b2).map(m => (m.msg_id, m.ts, m.topic, m.value, m.qos, m.retain))
       .toDF("msg_id", "ts", "topic", "value", "qos", "retain")

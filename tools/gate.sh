@@ -10,9 +10,16 @@
 # two guard specs that scan the source tree: one ingest seam per streaming
 # operator, and one session builder (graft.Session, with its conf policy).
 #
-# Usage: tools/gate.sh   (exits non-zero if a compile or a guard fails)
+# It also runs the upsert sink's specs: UpsertSinkSpec, the concurrency
+# property (readers scanning while a writer merges) and the fault-injection
+# spec. The parquet upsert sink is the live path's one reproduced race: when
+# a merge renamed the live state away, dashboard reads failed with
+# FILE_NOT_EXIST (7 of 22 at perfbench seed 91). These specs fail if a
+# publish ever again moves or deletes files a reader may still scan.
+#
+# Usage: tools/gate.sh   (exits non-zero if a compile, a guard or a sink spec fails)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch compile Test/compile \
-  "testOnly graft.streaming.SingleIngestSeamSpec graft.SingleSessionSpec"
-echo "[gate] compile + Test/compile + static guards green — safe to commit"
+  "testOnly graft.streaming.SingleIngestSeamSpec graft.SingleSessionSpec graft.streaming.UpsertSinkSpec graft.streaming.UpsertSinkProperties graft.streaming.UpsertSinkVersionsSpec"
+echo "[gate] compile + Test/compile + static guards + upsert sink specs green — safe to commit"
