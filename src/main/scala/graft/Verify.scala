@@ -6,8 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val only = SparkEntry.onlyFromEnv
-    val selected = SparkEntry.select(only)
+    val selected = SparkEntry.select(SparkEntry.onlyFromEnv)
     val spark = Session.local(cpus)
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
@@ -29,14 +28,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // subset runs dump only the selected oracles so check.py's inventory
-    // matches the parquet it finds
-    val oracles = only match {
-      case Some(names) => SparkEntry.oracleSql.filter { case (n, _) => names(n) }
-      case None => SparkEntry.oracleSql
-    }
-    val json = oracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // the selected queries' oracles only, so check.py's inventory matches
+    // the parquet it finds; in `select`'s order (mapping the key set would
+    // build a new hash set and reorder the file)
+    val json = selected.keysIterator
+      .map(k => s"${q(k)}: ${q(SparkEntry.oracleSql(k))}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -70,8 +70,8 @@ object DeltaAttribution {
   def attributeDelta(oldDocs: DataFrame, probeDocs: DataFrame): DataFrame = {
     val old = Caching.cached(oldDocs)
     val probes = Caching.cached(probeDocs)
-    // materialize the shared trunks EAGERLY (this query is in
-    // SparkEntry.eagerQueries): four screens consume each cache from
+    // materialize the shared trunks EAGERLY (this query's catalog entry
+    // is flagged eager): four screens consume each cache from
     // independent plan branches, and Spark schedules independent stages
     // concurrently — lazily-persisted partitions race and every branch
     // recomputes the parse (measured: 21.9 s lazy -> 8.4 s eager at

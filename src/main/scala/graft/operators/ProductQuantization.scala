@@ -474,8 +474,8 @@ object ProductQuantization {
     * plateaus in nProbe alone (0.503 at probe-10: the ADC ranking, not
     * cell coverage, is the binding constraint), and the measured Pareto
     * knee reaching the 0.9 serve floor is probe-12/C-1500 (0.938; the
-    * full sweep is in BENCH_NOTES_r18). A ~30% refine fraction is the
-    * honest price of serve-grade recall on THIS corpus — 64-d
+    * full sweep: `git show 4c95c6d:BENCH_NOTES_r18.md`). A ~30% refine
+    * fraction is the honest price of serve-grade recall on THIS corpus — 64-d
     * near-equidistant synthetic points give an 8-bit-per-subspace ADC
     * very little to rank on (the documented distance-concentration
     * finding); on real embedding manifolds the same curves locate a far

@@ -5,31 +5,30 @@ import java.nio.file.{Files, Paths}
 import graft.SparkEntry
 
 /** Writes every driver-contract query's formatted physical plan to one
-  * markdown file (PLANS_r{N}.md) — the reviewable artifact behind the
-  * scale claims: pushed filters, pruned read schemas, broadcast vs
-  * sort-merge picks, codegen spans, and the absence of nested-loop joins.
-  * Eagerly-executing queries (streaming, iterative) are skipped — their
-  * plan-shape claims rest on their batch twins' plans / the DedupClusters
-  * scaladoc (see SparkEntry.eagerQueries).
+  * markdown file — the reviewable artifact behind the scale claims: pushed
+  * filters, pruned read schemas, broadcast vs sort-merge picks, codegen
+  * spans, and the absence of nested-loop joins. Eagerly-executing queries
+  * (streaming, iterative) are skipped — their plan-shape claims rest on
+  * their batch twins' plans / the DedupClusters scaladoc (see the `eager`
+  * flag of SparkEntry.Query).
+  *
+  * Usage: runMain graft.tools.DumpPlans <sfDir> <out.md>
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val out = if (args.length > 1) args(1) else "PLANS_r3.md"
+    require(args.length == 2, "usage: DumpPlans <sfDir> <out.md>")
+    val Array(dir, out) = args
     val spark = graft.Session.local(4)
-    // the ONE shared eager-exclusion set — see SparkEntry.eagerQueries
-    val eager = SparkEntry.eagerQueries
     val sb = new StringBuilder
-    sb.append(s"# Physical plans (sf0.001, formatted explain)\n\n")
+    sb.append(s"# Physical plans ($dir, formatted explain)\n\n")
     sb.append("Generated by `graft.tools.DumpPlans`. Streaming/iterative " +
-      "queries excluded (executed eagerly; see SparkEntry.eagerQueries).\n")
-    val batch = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => eager.contains(name) }
+      "queries excluded (executed eagerly; see SparkEntry.Query).\n")
+    val batch = SparkEntry.catalog.filterNot(_.eager).sortBy(_.name)
     // plan each query ONCE; derive both the index counts and the formatted
     // dump from the same QueryExecution
-    val planned = batch.map { case (name, fn) =>
-      val qe = fn(spark, dir).queryExecution
-      (name, qe.executedPlan.toString,
+    val planned = batch.map { q =>
+      val qe = q.run(spark, dir).queryExecution
+      (q.name, qe.executedPlan.toString,
         qe.explainString(org.apache.spark.sql.execution.FormattedMode))
     }
     // shuffle/join-shape index first — the one-glance scale review: how many

@@ -6,8 +6,8 @@ import java.nio.file.{Files, Paths}
   * `<outDir>/<query>_<tag>.txt` — the per-query before/after plan artifact
   * the optimization rounds commit under plans/r{N}/ (DumpPlans writes the
   * whole-suite index; this writes the judge-checkable per-query files).
-  * Eagerly-executing queries (SparkEntry.eagerQueries) are skipped — their
-  * returned frame's plan is a post-collect LocalTableScan.
+  * Eagerly-executing queries (the `eager` flag of SparkEntry.Query) are
+  * skipped — their returned frame's plan is a post-collect LocalTableScan.
   *
   * Usage: runMain graft.tools.PlanSnap <outDir> <tag> [-f] <query> [query...]
   *
@@ -26,11 +26,13 @@ object PlanSnap {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = graft.Session.local(4)
     new java.io.File(outDir).mkdirs()
+    val byName = graft.SparkEntry.catalog.map(q => q.name -> q).toMap
     names.foreach { name =>
-      if (!force && graft.SparkEntry.eagerQueries.contains(name)) {
+      val q = byName(name)
+      if (!force && q.eager) {
         println(s"[plansnap] skip eager $name")
       } else {
-        val qe = graft.SparkEntry.queries(name)(spark, dir).queryExecution
+        val qe = q.run(spark, dir).queryExecution
         val txt = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), txt)
         val plan = qe.executedPlan.toString

@@ -1,5 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicReference
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent,
+  QueryStartedEvent, QueryTerminatedEvent}
+
 /** Global physical-plan invariant over EVERY driver-contract query: no
   * nested-loop and no cartesian join anywhere — the two shapes that are
   * correct at test scale and dead at 100 TB. The single exemption is
@@ -122,17 +131,31 @@ class PlanAuditSpec extends SparkSpec {
     // equi-join of two nq x depth frames
     "ann_hybrid_rrf" -> 3)
   test("no driver query plans a cartesian or nested-loop join") {
-    // eager (streaming/iterative) queries are skipped via the ONE shared
-    // exclusion set — see SparkEntry.eagerQueries for the rationale
-    val offenders = SparkEntry.queries.toSeq
-      .filterNot { case (name, _) => SparkEntry.eagerQueries.contains(name) }
-      .flatMap { case (name, fn) =>
-        val plan = fn(spark, sf0001).queryExecution.executedPlan.toString
+    // eager (streaming/iterative) queries are skipped by their catalog
+    // flag — see SparkEntry.Query for the rationale. A query whose build
+    // starts a stream but lacks the flag would have this audit replay the
+    // stream and then assert on nothing, so the listener records every
+    // stream started while the frames are built: QueryStartedEvent reaches
+    // it before `start()` returns, while `building` still names the query.
+    val building = new AtomicReference[String]
+    val startedBy = new ConcurrentLinkedQueue[String]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = startedBy.add(building.get)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val offenders =
+      try SparkEntry.catalog.filterNot(_.eager).flatMap { q =>
+        building.set(q.name)
+        val plan = q.run(spark, sf0001).queryExecution.executedPlan.toString
         val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(plan).length
-        val nested = bnlj > allowedNestedLoops.getOrElse(name, 0)
+        val nested = bnlj > allowedNestedLoops.getOrElse(q.name, 0)
         val cartesian = plan.contains("CartesianProduct")
-        if (nested || cartesian) Some(name) else None
-      }
+        if (nested || cartesian) Some(q.name) else None
+      } finally spark.streams.removeListener(listener)
+    assert(startedBy.isEmpty, "queries without the eager flag started a stream " +
+      s"when built: ${startedBy.asScala.toSeq.distinct.mkString(", ")}")
     assert(offenders.isEmpty, s"scale-killer joins in: $offenders")
   }
 
@@ -178,16 +201,15 @@ class PlanAuditSpec extends SparkSpec {
   test("parquet scans prune columns in EVERY driver query plan") {
     val scanRe = "FileScan parquet [^\\n]*?/(\\w+)\\.parquet[^\\n]*?ReadSchema: struct<([^\\n]*)>".r
     var scansSeen = 0
-    val offenders = SparkEntry.queries.toSeq
-      .filterNot { case (name, _) => SparkEntry.eagerQueries.contains(name) }
-      .flatMap { case (name, fn) =>
-        val plan = fn(spark, sf0001).queryExecution.executedPlan.toString
+    val offenders = SparkEntry.catalog.filterNot(_.eager)
+      .flatMap { q =>
+        val plan = q.run(spark, sf0001).queryExecution.executedPlan.toString
         scanRe.findAllMatchIn(plan).flatMap { m =>
           scansSeen += 1
           val (table, cols) = (m.group(1), topLevelCols(m.group(2)))
-          val cap = queryScanCols.getOrElse((name, table),
+          val cap = queryScanCols.getOrElse((q.name, table),
             maxScanCols.getOrElse(table, 0))
-          if (cols > cap) Some(s"$name reads $cols cols of $table (cap $cap): ${m.group(2)}")
+          if (cols > cap) Some(s"${q.name} reads $cols cols of $table (cap $cap): ${m.group(2)}")
           else None
         }
       }

@@ -35,12 +35,11 @@ class CodegenCompileSpec extends SparkSpec {
     // interpreted fallback on ANY driver path is a shipped constant-factor
     // loss the normal suite cannot see
     withStrictCodegen {
-      val offenders = graft.SparkEntry.queries.toSeq
-        .filterNot { case (n, _) => graft.SparkEntry.eagerQueries.contains(n) }
-        .flatMap { case (name, fn) =>
-          try { fn(spark, sf0001).count(); None }
+      val offenders = graft.SparkEntry.catalog.filterNot(_.eager)
+        .flatMap { q =>
+          try { q.run(spark, sf0001).count(); None }
           catch { case e: Throwable =>
-            Some(s"$name: ${e.getClass.getSimpleName}: " +
+            Some(s"${q.name}: ${e.getClass.getSimpleName}: " +
               String.valueOf(e.getMessage).take(200))
           }
         }

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
-# Equal-suite-size carried-set bench comparison (the BENCH_NOTES_r18 §1
-# recipe, committed so every round reproduces carried ratios the right way
-# by default).
+# Equal-suite-size carried-set bench comparison (the recipe of §1 of
+# `git show 4c95c6d:BENCH_NOTES_r18.md`, committed so every round reproduces
+# carried ratios the right way by default).
 #
 # WHY: the r18 A/B isolated ONE reproducible cross-round drift mechanism —
 # suite size. The same tree, same window, same 218 queries cost +7.3%

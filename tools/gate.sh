@@ -17,9 +17,14 @@
 # FILE_NOT_EXIST (7 of 22 at perfbench seed 91). These specs fail if a
 # publish ever again moves or deletes files a reader may still scan.
 #
-# Usage: tools/gate.sh   (exits non-zero if a compile, a guard or a sink spec fails)
+# And it runs QuerySelectionSpec (seconds, no Spark session): the query
+# catalog is the registry Verify, Bench, the plan tools and the benchmark
+# all read, and the spec checks its names are distinct and its views agree.
+#
+# Usage: tools/gate.sh   (exits non-zero if a compile, a guard, the catalog
+#                         spec or a sink spec fails)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch compile Test/compile \
-  "testOnly graft.streaming.SingleIngestSeamSpec graft.SingleSessionSpec graft.streaming.UpsertSinkSpec graft.streaming.UpsertSinkProperties graft.streaming.UpsertSinkVersionsSpec"
-echo "[gate] compile + Test/compile + static guards + upsert sink specs green — safe to commit"
+  "testOnly graft.streaming.SingleIngestSeamSpec graft.SingleSessionSpec graft.QuerySelectionSpec graft.streaming.UpsertSinkSpec graft.streaming.UpsertSinkProperties graft.streaming.UpsertSinkVersionsSpec"
+echo "[gate] compile + Test/compile + static guards + catalog + upsert sink specs green — safe to commit"
