@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.MqttQueries
 
@@ -41,47 +40,21 @@ object FileReplayHistory {
       useTws: Boolean = false): DataFrame = {
     import spark.implicits._
     val m = MqttQueries.replayMessages(spark, dir)
-    val work = java.nio.file.Files.createTempDirectory("graft_file_replay").toFile
-    try {
-      val inDir = new java.io.File(work, "in").getAbsolutePath
-      val staged = m.select(col("msg_id"), col("ts").cast("timestamp").as("ts"),
-        col("topic"), col("value"), col("qos"), col("retain"))
-      FileStage.stage(staged, inDir, chunks, col("ts"), col("msg_id"))
-      val outDir = new java.io.File(work, "out").getAbsolutePath
-      val ckDir = new java.io.File(work, "ck").getAbsolutePath
-      var schema: org.apache.spark.sql.types.StructType = null
-      // state sized to the topic keyspace; the clone-at-start contract is
-      // documented at ReplayHarness.runWithStatePartitions. noDataBatches
-      // off: both CDC forms emit on arrival (StatefulCdc: fmgws NoTimeout;
-      // TwsCdc: TimeMode.None — no timers), so the trailing no-data batch
-      // would be pure state-commit cost.
-      def maybeRocksDb[T](body: => T): T =
-        if (useTws) TwsCdc.withRocksDb(spark)(body) else body
-      val q = maybeRocksDb {
-        ReplayHarness.runWithStatePartitions(spark, 8, noDataBatches = false) {
-          val stream = spark.readStream
-            .schema(staged.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(inDir)
-          val cdc =
-            if (useTws) TwsCdc.changes(stream.as[MqttMsg])
-            else StatefulCdc.changes(stream.as[MqttMsg])
-          schema = cdc.schema
-          // file-sink readback (r22): CDC emissions are change-cardinality
-          // (corpus-scale), so they ride a distributed parquet sink, never
-          // the driver-resident memory sink
-          cdc
-            .writeStream.format("parquet")
-            .option("path", outDir).option("checkpointLocation", ckDir)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        }
+    def maybeRocksDb[T](body: => T): T =
+      if (useTws) TwsCdc.withRocksDb(spark)(body) else body
+    // state sized to the topic keyspace; CDC emissions are
+    // change-cardinality, so they ride the harness's parquet sink
+    val cdc = maybeRocksDb {
+      ReplayHarness.emissionsFromFiles(spark, MqttMsg.staged(m), chunks,
+          statePartitions = 8, prefix = "graft_file_replay",
+          outputMode = "append", col("ts"), col("msg_id")) { stream =>
+        val msgs = stream.as[MqttMsg]
+        (if (useTws) TwsCdc.changes(msgs) else StatefulCdc.changes(msgs)).toDF()
       }
-      try q.awaitTermination() finally q.stop()
-      val kept = ReplayHarness.pinnedParquet(spark, schema, outDir)
-        .withColumn("ts", col("ts").cast("timestamp_ntz"))
-        .select(col("ts"), col("topic"), col("value"), col("msg_id"))
-      // the SAME post-processing as the batch form
-      MqttQueries.finishHistory(kept, m)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(work)
+    }
+    val kept = cdc.withColumn("ts", col("ts").cast("timestamp_ntz"))
+      .select(col("ts"), col("topic"), col("value"), col("msg_id"))
+    // the SAME post-processing as the batch form
+    MqttQueries.finishHistory(kept, m)
   }
 }

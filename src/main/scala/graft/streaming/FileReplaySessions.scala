@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Tables
 
@@ -26,7 +25,7 @@ import graft.sources.Tables
   * micro-batch Spark runs before AvailableNow terminates applies it and
   * flushes them ([[FileStage.appendSentinel]]'s flush contract). The
   * sentinel's own session never finalizes (nothing passes ITS end) and is
-  * dropped at memory-sink readback — never inside the streaming plan,
+  * dropped at the readback — never inside the streaming plan,
   * where the filter would be pushed below the EventTimeWatermark operator.
   *
   * Oracle: the SAME lag + cumulative-sum session SQL as the batch
@@ -41,71 +40,34 @@ object FileReplaySessions {
       stream => StreamingSessions.sessions(stream, gap = "30 minutes",
         watermark = "10 minutes"))
 
-  /** The staging + sentinel + readback harness, parameterized on the
-    * sessionizing transform so the `session_window` form and the
-    * hand-rolled [[TwsSessions]] state machine certify through the SAME
-    * replay path (and differ ONLY in the operator under test). The
-    * transform must map the staged `(event_id, ts, user_id)` stream to
+  /** The session replay, parameterized on the sessionizing transform so
+    * the `session_window` form and the hand-rolled [[TwsSessions]] state
+    * machine certify through the SAME [[ReplayHarness]] replay (and differ
+    * ONLY in the operator under test). The transform must map the staged
+    * `(event_id, ts, user_id)` stream to
     * `(user_id, session_start, session_end, n_events)` finalized sessions
-    * in append mode.
+    * in append mode. An empty replay has no max event time, stages no
+    * sentinel and returns the sink's empty frame.
     */
   private[streaming] def run(spark: SparkSession, dir: String, chunks: Int,
       transform: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory("graft_file_sessions").toFile
-    try {
-      val inDir = new java.io.File(work, "in").getAbsolutePath
-      val staged = Tables.events(spark, dir)
-        .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-          col("user_id"))
-      FileStage.stage(staged, inDir, chunks, col("ts"), col("event_id"))
-      // the only driver-visible scalar: max(ts) for sentinel construction
-      val maxTs = staged.agg(max(col("ts"))).head().getTimestamp(0)
-      if (maxTs == null) // empty replay: nothing to sessionize (or flush)
-        return spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("user_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("session_start",
-              org.apache.spark.sql.types.TimestampNTZType),
-            org.apache.spark.sql.types.StructField("session_end",
-              org.apache.spark.sql.types.TimestampNTZType),
-            org.apache.spark.sql.types.StructField("n_events",
-              org.apache.spark.sql.types.LongType))))
-      val t = new Timestamp(maxTs.getTime + 24L * 3600 * 1000)
-      FileStage.appendSentinel(
-        Seq((-1L, t, -1L)).toDF("event_id", "ts", "user_id"),
-        inDir, chunks, 0)
-      val outDir = new java.io.File(work, "out").getAbsolutePath
-      val ckDir = new java.io.File(work, "ck").getAbsolutePath
-      var schema: org.apache.spark.sql.types.StructType = null
-      // state sized to the open-session keyspace; the clone-at-start
-      // contract is documented at ReplayHarness.runWithStatePartitions.
-      // noDataBatches stays ON: the sentinel flush depends on the trailing
-      // no-data batch applying the advanced watermark (scaladoc above).
-      val q = ReplayHarness.runWithStatePartitions(spark, 8) {
-        val stream = spark.readStream
-          .schema(staged.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir)
-        val out = transform(stream)
-        schema = out.schema
-        // file-sink readback (r22): finalized sessions are
-        // session-cardinality (corpus-scale), so they ride a distributed
-        // parquet sink, never the driver-resident memory sink
-        out.writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckDir)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-      try q.awaitTermination() finally q.stop()
+    val staged = Tables.events(spark, dir)
+      .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
+        col("user_id"))
+    val flush = ReplayHarness.Flush(Seq(max(col("ts"))), maxTs =>
+      Seq((-1L, new Timestamp(maxTs.getTimestamp(0).getTime + 24L * 3600 * 1000),
+        -1L)).toDF("event_id", "ts", "user_id"))
+    // state sized to the open-session keyspace; finalized sessions are
+    // session-cardinality, so they ride the harness's parquet sink
+    ReplayHarness.emissionsFromFiles(spark, staged, chunks,
+        statePartitions = 8, prefix = "graft_file_sessions",
+        outputMode = "append", flush, col("ts"), col("event_id"))(transform)
       // drop the flush sentinels here, post-sink. Null-safe: a plain =!=
       // would also drop any NULL user_id group the batch oracle keeps.
-      ReplayHarness.pinnedParquet(spark, schema, outDir)
-        .filter(!col("user_id").eqNullSafe(-1L))
-        .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
-        .withColumn("session_end", col("session_end").cast("timestamp_ntz"))
-        .orderBy(col("user_id"), col("session_start"))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(work)
+      .filter(!col("user_id").eqNullSafe(-1L))
+      .withColumn("session_start", col("session_start").cast("timestamp_ntz"))
+      .withColumn("session_end", col("session_end").cast("timestamp_ntz"))
+      .orderBy(col("user_id"), col("session_start"))
   }
 }

@@ -35,8 +35,7 @@ object FileReplayState {
     val work = java.nio.file.Files.createTempDirectory("graft_file_state").toFile
     try {
       val inDir = new java.io.File(work, "in").getAbsolutePath
-      val staged = m.select(col("msg_id"), col("ts").cast("timestamp").as("ts"),
-        col("topic"), col("value"), col("qos"), col("retain"))
+      val staged = MqttMsg.staged(m)
       FileStage.stage(staged, inDir, chunks, col("ts"), col("msg_id"))
       val statePath = new java.io.File(work, "state").getAbsolutePath
       val q = spark.readStream

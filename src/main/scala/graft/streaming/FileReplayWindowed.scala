@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.MqttQueries
 
@@ -29,9 +28,10 @@ import graft.operators.MqttQueries
   * state-commit overhead and the spec re-proved the single-sentinel
   * equality). The sentinel is dropped from the aggregated output — the
   * standard end-of-stream flush pattern for certifying append-mode
-  * windows over finite input. Ingest is the distributed file-source
-  * staging (no driver-side input materialization; the only driver-visible
-  * scalars are max(ts)/max(msg_id) for sentinel construction).
+  * windows over finite input. Ingest, flush and readback are
+  * [[ReplayHarness.emissionsFromFiles]]'s (no driver-side input
+  * materialization; the only driver-visible scalars are max(ts)/max(msg_id)
+  * for sentinel construction, and an empty replay has none to flush).
   */
 object FileReplayWindowed {
 
@@ -40,55 +40,28 @@ object FileReplayWindowed {
   def hourlyStats(spark: SparkSession, dir: String, chunks: Int = 3,
       watermarkDelay: String = "30 minutes"): DataFrame = {
     import spark.implicits._
-    val m = MqttQueries.replayMessages(spark, dir)
-    val work = java.nio.file.Files.createTempDirectory("graft_file_windowed").toFile
-    try {
-      val inDir = new java.io.File(work, "in").getAbsolutePath
-      val staged = m.select(col("msg_id"), col("ts").cast("timestamp").as("ts"),
-        col("topic"), col("value"), col("qos"), col("retain"))
-      FileStage.stage(staged, inDir, chunks, col("ts"), col("msg_id"))
-      // the flush sentinel: one row, 3 h past the real max event time, in
-      // its own LAST-scheduled file-batch (watermark advance; the trailing
-      // no-data batch performs the flush)
-      val bounds = staged.agg(max(col("ts")), max(col("msg_id"))).head()
-      val sentinel = Seq((bounds.getLong(1) + 1L,
+    // the flush sentinel: one row, 3 h past the real max event time, in
+    // its own LAST-scheduled file-batch (watermark advance; the trailing
+    // no-data batch performs the flush)
+    val flush = ReplayHarness.Flush(Seq(max(col("ts")), max(col("msg_id"))),
+      bounds => Seq((bounds.getLong(1) + 1L,
         new Timestamp(bounds.getTimestamp(0).getTime + 3L * 3600 * 1000),
         FlushTopic, Array.empty[Byte], 0, 0))
-        .toDF("msg_id", "ts", "topic", "value", "qos", "retain")
-      FileStage.appendSentinel(sentinel, inDir, chunks, 0)
-      val outDir = new java.io.File(work, "out").getAbsolutePath
-      val ckDir = new java.io.File(work, "ck").getAbsolutePath
-      var schema: org.apache.spark.sql.types.StructType = null
-      // noDataBatches stays ON: the sentinel flush depends on the trailing
-      // no-data batch applying the advanced watermark (scaladoc above)
-      val q = ReplayHarness.runWithStatePartitions(spark, 8) {
-        val stream = spark.readStream
-          .schema(staged.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir)
-        // NOTE: the sentinel filter must NOT be part of the streaming
-        // plan — a `topic =!= FlushTopic` predicate here gets pushed
-        // below the EventTimeWatermark operator (topic is not the event
-        // -time column), so the sentinel rows would be dropped at the
-        // scan and never advance the watermark. It is applied at the
-        // sink readback below instead.
-        val out = WindowedStats.hourlyStats(stream, watermarkDelay)
-        schema = out.schema
-        // file-sink readback (r22): finalized windows are
-        // window-cardinality (corpus-scale), so they ride a distributed
-        // parquet sink, never the driver-resident memory sink
-        out.writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckDir)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-      try q.awaitTermination() finally q.stop()
-      // the flush-sentinel windows are dropped here, post-sink
-      ReplayHarness.pinnedParquet(spark, schema, outDir)
-        .filter(col("topic") =!= FlushTopic)
-        .withColumn("win_start", col("win_start").cast("timestamp_ntz"))
-        .select(col("win_start"), col("topic"), col("n_msgs"),
-          col("total_bytes"))
-        .orderBy(col("win_start"), col("topic"))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(work)
+        .toDF("msg_id", "ts", "topic", "value", "qos", "retain"))
+    // NOTE: the sentinel filter must NOT be part of the streaming plan — a
+    // `topic =!= FlushTopic` predicate there gets pushed below the
+    // EventTimeWatermark operator (topic is not the event-time column), so
+    // the sentinel rows would be dropped at the scan and never advance the
+    // watermark. It is applied to the readback instead.
+    ReplayHarness.emissionsFromFiles(spark,
+        MqttMsg.staged(MqttQueries.replayMessages(spark, dir)), chunks,
+        statePartitions = 8, prefix = "graft_file_windowed",
+        outputMode = "append", flush, col("ts"), col("msg_id"))(
+      WindowedStats.hourlyStats(_, watermarkDelay))
+      .filter(col("topic") =!= FlushTopic)
+      .withColumn("win_start", col("win_start").cast("timestamp_ntz"))
+      .select(col("win_start"), col("topic"), col("n_msgs"),
+        col("total_bytes"))
+      .orderBy(col("win_start"), col("topic"))
   }
 }

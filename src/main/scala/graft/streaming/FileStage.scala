@@ -2,10 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 
-/** Shared distributed staging seam of the file-source replay certificates
-  * ([[FileReplayHistory]], [[FileReplayState]], [[FileReplayWindowed]],
-  * [[StreamStreamJoin]], [[FileReplaySessions]],
-  * [[FileReplayHeavyHitters]]): write a replay frame as `chunks`
+/** Shared distributed staging seam of the file-source replays: every
+  * [[ReplayHarness]] replay (the `emissionsFromFiles` twins and the
+  * [[StreamStreamJoin]] log) and [[FileReplayState]]'s own runner. Write a
+  * replay frame as `chunks`
   * range-ordered parquet part files whose modification times ascend in
   * range order, so the built-in file stream source (which schedules
   * oldest-mtime-first) consumes them as real micro-batches in event order —
@@ -68,8 +68,8 @@ private[streaming] object FileStage {
     * form back, which is why `index` still composes). Sentinel rows must
     * look like real typed rows (a marker filter inside the streaming plan
     * would be pushed below the EventTimeWatermark operator and drop them at
-    * the scan — the FileReplayWindowed lesson); callers drop them at
-    * memory-sink readback.
+    * the scan — the FileReplayWindowed lesson); callers drop them at the
+    * readback.
     */
   def appendSentinel(df: DataFrame, dir: String, chunks: Int, index: Int): Unit = {
     val before = new java.io.File(dir).listFiles()

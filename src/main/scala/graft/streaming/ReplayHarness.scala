@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** The ingest seam of the streaming operators. Each operator is a
   * `DataFrame => DataFrame` stateful fold; this harness feeds it a replay
@@ -15,7 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * aggregates here are MONOTONE (counts nondecreasing, min nonincreasing),
   * so the final value per key is the row max/min — batch-order-independent.
   * The only other seam is [[Replay]], which publishes into the DSv2 MQTT
-  * source for the exemplar [[StreamingState]].
+  * source for the exemplar [[StreamingState]]. That exemplar and
+  * [[FileReplayState]] keep their own runners: their sink is the
+  * [[UpsertSink.merge]] `foreachBatch`, not an emission readback.
   */
 private[streaming] object ReplayHarness {
 
@@ -61,15 +65,9 @@ private[streaming] object ReplayHarness {
     * save/set/restore dance.
     *
     * `noDataBatches = false` additionally starts the stream with
-    * [[NoDataKey]] off (captured by the same clone-at-start contract), so
-    * AvailableNow terminates after the LAST data batch instead of running
-    * one trailing no-data micro-batch (~0.5-0.7 s of pure state-commit +
-    * offset-log machinery). Only callers audited as emission-complete
-    * without watermark-driven flushing may pass false — see
-    * [[emissionsFromFiles]] for the audit; the windowed/session replay
-    * harnesses ([[FileReplayWindowed]], [[FileReplaySessions]]) DEPEND on
-    * that trailing batch for their sentinel flush
-    * ([[FileStage.appendSentinel]]) and must keep the default.
+    * [[NoDataKey]] off (captured by the same clone-at-start contract). The
+    * replays in this object derive it from [[Staged.flushed]]; nothing else
+    * passes it.
     */
   def runWithStatePartitions(spark: SparkSession, statePartitions: Int,
       noDataBatches: Boolean = true)(
@@ -87,80 +85,128 @@ private[streaming] object ReplayHarness {
     }
   }
 
+  /** An end-of-stream flush sentinel, given as data: `maxima` aggregate the
+    * staged input (the first one is its max event time) and `rows` builds
+    * the sentinel rows from them. The rows must look like real typed rows
+    * of the staged schema — see [[FileStage.appendSentinel]].
+    */
+  final case class Flush(maxima: Seq[Column], rows: Row => DataFrame)
+
+  /** A staged replay: `chunks` range-ordered file-batches under `dir`, plus
+    * one sentinel file-batch after them when `flushed`.
+    *
+    * The no-data rule: a replay's stream runs the trailing no-data
+    * micro-batch iff `flushed`. The watermark computed at the end of the
+    * sentinel batch is applied only in the batch after it, and with no data
+    * left that is the no-data batch — it emits and evicts every append-mode
+    * window, session and outer-join row the sentinel released. An
+    * unflushed replay is emission-complete at its last data batch
+    * (append-mode dedup emits on arrival, the tws/fmgws processors run
+    * without timers, the update-mode folds are watermark-free), so there
+    * the no-data batch would be pure state-commit cost.
+    */
+  final case class Staged(dir: String, schema: StructType, flushed: Boolean) {
+    /** The replay as a file stream, one micro-batch per file. */
+    def stream(spark: SparkSession): DataFrame = spark.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(dir)
+  }
+
+  /** Stage `df` into `dir` via [[FileStage.stage]], then append the `flush`
+    * sentinel. An input with no rows has no max event time, so it stages
+    * no sentinel: there is nothing to flush.
+    */
+  def stage(df: DataFrame, dir: String, chunks: Int, flush: Option[Flush],
+      order: Column*): Staged = {
+    FileStage.stage(df, dir, chunks, order: _*)
+    val flushed = flush.exists { f =>
+      val maxima = df.agg(f.maxima.head, f.maxima.tail: _*).head()
+      val hasRows = !maxima.isNullAt(0)
+      if (hasRows) FileStage.appendSentinel(f.rows(maxima), dir, chunks, 0)
+      hasRows
+    }
+    Staged(dir, df.schema, flushed)
+  }
+
+  /** Run `query` (built over `replay`'s stream) to a parquet file sink under
+    * AvailableNow and return its emissions as a pinned frame. The sink and
+    * its checkpoint live in a temp dir deleted before this returns; the
+    * stream is stopped on every path. No-data batches follow [[Staged]]'s
+    * rule.
+    */
+  def sinkParquet(spark: SparkSession, replay: Staged, statePartitions: Int,
+      prefix: String)(query: => DataFrame): DataFrame = {
+    val work = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try {
+      val outDir = new java.io.File(work, "out").getAbsolutePath
+      var schema: StructType = null
+      val q = runWithStatePartitions(spark, statePartitions,
+          noDataBatches = replay.flushed) {
+        val result = query
+        schema = result.schema
+        result.writeStream.format("parquet")
+          .option("path", outDir)
+          .option("checkpointLocation", new java.io.File(work, "ck").getAbsolutePath)
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start()
+      }
+      try q.awaitTermination() finally q.stop()
+      pinnedParquet(spark, schema, outDir)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(work)
+  }
+
   /** Stream `staged` through `agg` in `chunks` file micro-batches (staged
     * DISTRIBUTED via [[FileStage]], range-ordered on `order`, one REAL
-    * micro-batch per file) and return every emission. Shared by every
-    * `*_streaming_file` twin; `agg` receives the raw file-source frame
-    * (callers re-type with `.as[T]` where their agg is typed). Append-mode
-    * users (dedup / winnow key sets) emit on ARRIVAL — first-seen rows
-    * pass `dropDuplicatesWithinWatermark` immediately; the watermark only
-    * EVICTS — so unlike windowed/session aggregation no flush sentinel is
-    * needed. Readback is the OUTPUT surface: update-mode emissions are
-    * key-bounded and ride the memory sink; append-mode emissions are
-    * ARRIVAL-sized and ride a parquet file sink + distributed pin instead
-    * (r22 — no corpus-sized row set ever visits the driver).
+    * micro-batch per file) and return every emission. Every single-source
+    * file replay routes through here (the two-source stream-stream join
+    * uses [[stage]] and [[sinkParquet]] directly); `agg` receives the raw
+    * file-source frame (callers re-type with `.as[T]` where their agg is
+    * typed).
+    *
+    * Readback is the OUTPUT surface: append-mode emissions are
+    * ARRIVAL-sized and ride a parquet file sink + distributed pin
+    * ([[sinkParquet]]) — no corpus-sized row set ever visits the driver;
+    * update-mode emissions are key-bounded and ride the memory sink. Both
+    * follow [[Staged]]'s no-data rule; an empty input returns the sink's
+    * empty, correctly typed frame.
     */
   def emissionsFromFiles(spark: SparkSession, staged: DataFrame, chunks: Int,
       statePartitions: Int, prefix: String, outputMode: String,
-      order: org.apache.spark.sql.Column*)(
+      order: Column*)(agg: DataFrame => DataFrame): DataFrame =
+    replay(spark, staged, chunks, statePartitions, prefix, outputMode, None,
+      order)(agg)
+
+  /** The flushed form: [[Flush]] sentinel staged after the data (append-mode
+    * windows, sessions and outer joins emit only once the watermark passes
+    * them, which a bounded replay otherwise never does).
+    */
+  def emissionsFromFiles(spark: SparkSession, staged: DataFrame, chunks: Int,
+      statePartitions: Int, prefix: String, outputMode: String, flush: Flush,
+      order: Column*)(agg: DataFrame => DataFrame): DataFrame =
+    replay(spark, staged, chunks, statePartitions, prefix, outputMode,
+      Some(flush), order)(agg)
+
+  private def replay(spark: SparkSession, staged: DataFrame, chunks: Int,
+      statePartitions: Int, prefix: String, outputMode: String,
+      flush: Option[Flush], order: Seq[Column])(
       agg: DataFrame => DataFrame): DataFrame = {
     val work = java.nio.file.Files.createTempDirectory(prefix).toFile
     try {
-      val inDir = new java.io.File(work, "in").getAbsolutePath
-      FileStage.stage(staged, inDir, chunks, order: _*)
-      // No-data-batch audit (r22): every caller of this harness is
-      // emission-complete at the last DATA batch — append-mode dedup/winnow
-      // emit first-seen rows on ARRIVAL (`dropDuplicatesWithinWatermark`;
-      // the watermark only evicts), the tws/fmgws processors run
-      // TimeMode.None()/NoTimeout (no timers to fire), and the update-mode
-      // folds are watermark-free monotone aggregates (a no-data batch
-      // changes no key). The trailing no-data micro-batch AvailableNow
-      // otherwise appends is therefore pure state-commit/offset-log cost —
-      // skipped here; the watermark-flush-dependent harnesses
-      // (FileReplayWindowed/FileReplaySessions) do not route through this
-      // method and keep it.
+      val replay = stage(staged, new java.io.File(work, "in").getAbsolutePath,
+        chunks, flush, order: _*)
       if (outputMode == "append") {
-        // Scale seam (r22): append-mode emission sets are ARRIVAL-sized
-        // (first-seen keys, per-(query,vec) scored pairs) — corpus-scale,
-        // so they must never ride the driver-resident memory sink (the
-        // guide's no-collect rule; the old readback was a guaranteed
-        // driver OOM at 100 TB). Emissions go to a parquet FILE sink
-        // (distributed, exactly-once via the sink metadata log) and the
-        // read-back is pinned DISTRIBUTED (ContextCleaner-owned RDD
-        // cache) before the temp dir is deleted.
-        val outDir = new java.io.File(work, "out").getAbsolutePath
-        val ckDir = new java.io.File(work, "ck").getAbsolutePath
-        var schema: org.apache.spark.sql.types.StructType = null
-        val q = runWithStatePartitions(spark, statePartitions,
-            noDataBatches = false) {
-          val stream = spark.readStream
-            .schema(staged.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(inDir)
-          val result = agg(stream)
-          schema = result.schema
-          result.writeStream.format("parquet")
-            .option("path", outDir)
-            .option("checkpointLocation", ckDir)
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        try q.awaitTermination() finally q.stop()
-        pinnedParquet(spark, schema, outDir)
+        sinkParquet(spark, replay, statePartitions, prefix)(agg(replay.stream(spark)))
       } else {
         val name = s"${prefix}_${java.util.UUID.randomUUID().toString.take(8)}"
         try {
           val q = runWithStatePartitions(spark, statePartitions,
-              noDataBatches = false) {
-            val stream = spark.readStream
-              .schema(staged.schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(inDir)
-            agg(stream)
+              noDataBatches = replay.flushed) {
+            agg(replay.stream(spark))
               .writeStream.format("memory").queryName(name)
               .outputMode(outputMode)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+              .trigger(Trigger.AvailableNow())
               .start()
           }
           try q.awaitTermination() finally q.stop()
@@ -191,8 +237,8 @@ private[streaming] object ReplayHarness {
     * a cluster deployment needs a shared staging path kept for the frame's
     * lifetime (or a `localCheckpoint` instead of the cache).
     */
-  private[streaming] def pinnedParquet(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType, dir: String): DataFrame = {
+  private def pinnedParquet(spark: SparkSession, schema: StructType,
+      dir: String): DataFrame = {
     val pinned = graft.operators.Caching.cached(
       spark.read.schema(schema).parquet(dir))
     pinned.count() // materialize every partition before the dir dies

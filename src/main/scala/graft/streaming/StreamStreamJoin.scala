@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Tables
 
@@ -65,8 +64,8 @@ object StreamStreamJoin {
     * now stages once (sentinel included — see below) and replays twice. The
     * sentinel rows are harmless to the inner form (their user ids differ,
     * so they can never match each other, and both readbacks drop them
-    * anyway). The temp dir lives until JVM exit (shutdown hook), not
-    * per-call.
+    * anyway). An empty input stages no sentinel ([[ReplayHarness.stage]]).
+    * The temp dir lives until JVM exit (shutdown hook), not per-call.
     *
     * The cache key includes a fingerprint of the input parquet's file
     * names/sizes/mtimes, so rewriting the data under `dir` within one JVM
@@ -75,8 +74,8 @@ object StreamStreamJoin {
     * non-atomic `getOrElseUpdate` would leak an orphan temp dir and its
     * shutdown hook until JVM exit).
     */
-  private val stagedCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, String), String]
+  private val stagedCache = scala.collection.concurrent.TrieMap
+    .empty[(String, Int, String), ReplayHarness.Staged]
 
   /** Fingerprint of the events parquet under `dir` (path, size, mtime per
     * leaf file) — metadata-only, one driver-side listing. Listed through
@@ -103,29 +102,26 @@ object StreamStreamJoin {
   }
 
   private def ensureStaged(spark: SparkSession, dir: String,
-      chunks: Int): String = stagedCache.synchronized {
+      chunks: Int): ReplayHarness.Staged = stagedCache.synchronized {
     stagedCache.getOrElseUpdate((dir, chunks, inputFingerprint(spark, dir)), {
       import spark.implicits._
       val work = java.nio.file.Files.createTempDirectory("graft_ssj").toFile
       sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(work))
-      val inDir = new java.io.File(work, "in").getAbsolutePath
-      val staged = stagedEvents(spark, dir)
-      FileStage.stage(staged, inDir, chunks, col("ts"), col("event_id"))
-      val maxTs = staged.agg(max(col("ts"))).head().getTimestamp(0)
       // 25 h past the real max: clears window + delay for every real signup
-      val t = new java.sql.Timestamp(maxTs.getTime + 25L * 3600 * 1000)
-      FileStage.appendSentinel(
+      val flush = ReplayHarness.Flush(Seq(max(col("ts"))), maxTs => {
+        val t = new java.sql.Timestamp(maxTs.getTimestamp(0).getTime + 25L * 3600 * 1000)
         Seq((-1L, -1L, "signup", t), (-2L, -2L, "purchase", t))
-          .toDF("event_id", "user_id", "event_type", "ts"),
-        inDir, chunks, 0)
-      inDir
+          .toDF("event_id", "user_id", "event_type", "ts")
+      })
+      ReplayHarness.stage(stagedEvents(spark, dir),
+        new java.io.File(work, "in").getAbsolutePath, chunks, Some(flush),
+        col("ts"), col("event_id"))
     })
   }
 
   def signupPurchases(spark: SparkSession, dir: String, chunks: Int = 3,
       watermarkDelay: String = "30 minutes"): DataFrame = {
-    val inDir = ensureStaged(spark, dir, chunks)
-    joinStaged(spark, inDir, stagedEvents(spark, dir).schema, watermarkDelay)
+    joinStaged(spark, ensureStaged(spark, dir, chunks), watermarkDelay)
       // the shared staging carries the outer form's flush sentinels; they
       // cannot produce an inner match (distinct negative user ids), but
       // drop them defensively like the outer readback does
@@ -159,8 +155,7 @@ object StreamStreamJoin {
     */
   def signupPurchasesOuter(spark: SparkSession, dir: String, chunks: Int = 3,
       watermarkDelay: String = "30 minutes"): DataFrame = {
-    val inDir = ensureStaged(spark, dir, chunks)
-    joinStaged(spark, inDir, stagedEvents(spark, dir).schema, watermarkDelay,
+    joinStaged(spark, ensureStaged(spark, dir, chunks), watermarkDelay,
         "left_outer")
       // drop the flush sentinels (negative user ids), null-safely: a plain
       // >= 0 would also drop a NULL-user signup the batch oracle keeps
@@ -172,62 +167,41 @@ object StreamStreamJoin {
   /** The join topology over an already-staged event log (one micro-batch
     * per file, mtime order) — separated so the spec can drive it over
     * hand-built file batches and prove a match across a batch boundary.
-    * Returns the collected (unordered) result frame.
+    * Two sources read the one staged log, so of the harness only the
+    * parquet sink and readback apply ([[ReplayHarness.sinkParquet]]).
+    * Returns the (unordered) result frame.
     */
-  def joinStaged(spark: SparkSession, inDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+  def joinStaged(spark: SparkSession, replay: ReplayHarness.Staged,
       watermarkDelay: String, joinType: String = "inner"): DataFrame = {
-    def source(): DataFrame = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-
-    val signups = source()
+    val signups = replay.stream(spark)
       .filter(col("event_type") === "signup")
       .select(col("event_id").as("signup_event"), col("user_id"),
         col("ts").as("signup_ts"))
       .withWatermark("signup_ts", watermarkDelay)
-    val purchases = source()
+    val purchases = replay.stream(spark)
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_event"),
         col("user_id").as("p_user_id"), col("ts").as("purchase_ts"))
       .withWatermark("purchase_ts", watermarkDelay)
 
-    val joined = signups.join(purchases,
-      col("user_id") === col("p_user_id") &&
-        col("purchase_ts") >= col("signup_ts") &&
-        col("purchase_ts") <= col("signup_ts") +
-          expr(s"INTERVAL $WindowHours HOURS"),
-      joinType)
-
-    val work = java.nio.file.Files.createTempDirectory("ssj_out").toFile
-    try {
-      val outDir = new java.io.File(work, "out").getAbsolutePath
-      val ckDir = new java.io.File(work, "ck").getAbsolutePath
-      // state sized DOWN for the certification replay: a stream-stream join
-      // keeps ~4 store instances per side per partition, so the partition
-      // count multiplies the per-batch commit overhead that dominates at
-      // replay scale (measured on the pair at sf0.1: 8 -> 13.6 s,
-      // 4 -> 11.1 s, 2 -> 11.7 s — 4 is the knee; a production deployment
-      // sizes this to the keyspace instead). Result-identical by
-      // construction — the partition count is physical. The clone-at-start
-      // contract is documented at ReplayHarness.runWithStatePartitions.
-      // noDataBatches stays ON: the outer form's null-extension flush
-      // depends on the trailing no-data batch (scaladoc above).
-      val q = ReplayHarness.runWithStatePartitions(spark, 4) {
-        // file-sink readback (r22): join emissions are match-cardinality
-        // (corpus-scale), so they ride a distributed parquet sink, never
-        // the driver-resident memory sink
-        joined.writeStream.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckDir)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      }
-      try q.awaitTermination() finally q.stop()
-      ReplayHarness.pinnedParquet(spark, joined.schema, outDir)
-        .select(col("user_id"), col("signup_event"), col("purchase_event"),
-          col("signup_ts").cast("timestamp_ntz").as("signup_ts"),
-          col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(work)
+    // state sized DOWN for the certification replay: a stream-stream join
+    // keeps ~4 store instances per side per partition, so the partition
+    // count multiplies the per-batch commit overhead that dominates at
+    // replay scale (measured on the pair at sf0.1: 8 -> 13.6 s,
+    // 4 -> 11.1 s, 2 -> 11.7 s — 4 is the knee; a production deployment
+    // sizes this to the keyspace instead). Result-identical by
+    // construction — the partition count is physical. Join emissions are
+    // match-cardinality, so they ride the parquet sink.
+    ReplayHarness.sinkParquet(spark, replay, statePartitions = 4, "ssj_out")(
+      signups.join(purchases,
+        col("user_id") === col("p_user_id") &&
+          col("purchase_ts") >= col("signup_ts") &&
+          col("purchase_ts") <= col("signup_ts") +
+            expr(s"INTERVAL $WindowHours HOURS"),
+        joinType))
+      .select(col("user_id"), col("signup_event"), col("purchase_event"),
+        col("signup_ts").cast("timestamp_ntz").as("signup_ts"),
+        col("purchase_ts").cast("timestamp_ntz").as("purchase_ts"))
   }
 
   /** DuckDB mirror of the left-outer form: every signup appears, matched

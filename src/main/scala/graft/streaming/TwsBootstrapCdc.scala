@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessorWithInitialState,
-  TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+  TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.operators.{MqttPipeline, MqttQueries}
 
@@ -57,12 +57,18 @@ object TwsBootstrapCdc {
       last.update(s.value)
 
     override def handleInputRows(topic: String, rows: Iterator[MqttMsg],
-        timers: TimerValues): Iterator[CdcEvent] =
-      TwsCdc.foldTopic(last, topic, rows)
+        timers: TimerValues): Iterator[CdcEvent] = {
+      val (next, out) =
+        CdcFold(if (last.exists()) Some(last.get()) else None, topic, rows)
+      next.foreach(last.update)
+      out.iterator
+    }
   }
 
   /** CDC over `msgs` with per-topic state bootstrapped from `snapshot` —
-    * the same update step as [[TwsCdc.changes]], plus `handleInitialState`.
+    * the same update step as [[TwsCdc.changes]] and [[StatefulCdc.changes]]
+    * (all three processors call the one [[CdcFold]]), plus
+    * `handleInitialState`.
     */
   def changesFrom(msgs: Dataset[MqttMsg],
       snapshot: Dataset[TopicLast]): Dataset[CdcEvent] =
@@ -107,40 +113,16 @@ object TwsBootstrapCdc {
     val headKept = MqttPipeline.historyKept(head)
     val snapshot = snapshotOf(head).as[TopicLast]
 
-    val work = java.nio.file.Files.createTempDirectory("graft_handoff").toFile
-    try {
-      val inDir = new java.io.File(work, "in").getAbsolutePath
-      val staged = tail.select(col("msg_id"),
-        col("ts").cast("timestamp").as("ts"),
-        col("topic"), col("value"), col("qos"), col("retain"))
-      FileStage.stage(staged, inDir, chunks, col("ts"), col("msg_id"))
-      val outDir = new java.io.File(work, "out").getAbsolutePath
-      val ckDir = new java.io.File(work, "ck").getAbsolutePath
-      var schema: org.apache.spark.sql.types.StructType = null
-      // noDataBatches off: the bootstrap processor runs TimeMode.None (no
-      // timers) and emits on arrival — the trailing no-data batch would be
-      // pure RocksDB-commit cost. File-sink readback (r22): CDC emissions
-      // are change-cardinality, so they ride a distributed parquet sink,
-      // never the driver-resident memory sink.
-      val q = TwsCdc.withRocksDb(spark) {
-        ReplayHarness.runWithStatePartitions(spark, 8, noDataBatches = false) {
-          val stream = spark.readStream
-            .schema(staged.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(inDir)
-          val cdc = changesFrom(stream.as[MqttMsg], snapshot)
-          schema = cdc.schema
-          cdc
-            .writeStream.format("parquet")
-            .option("path", outDir).option("checkpointLocation", ckDir)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        }
-      }
-      try q.awaitTermination() finally q.stop()
-      val streamedKept = ReplayHarness.pinnedParquet(spark, schema, outDir)
-        .withColumn("ts", col("ts").cast("timestamp_ntz"))
-        .select(col("ts"), col("topic"), col("value"), col("msg_id"))
-      MqttQueries.finishHistory(headKept.unionByName(streamedKept), m)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(work)
+    // CDC emissions are change-cardinality, so they ride the harness's
+    // parquet sink
+    val streamed = TwsCdc.withRocksDb(spark) {
+      ReplayHarness.emissionsFromFiles(spark, MqttMsg.staged(tail), chunks,
+          statePartitions = 8, prefix = "graft_handoff",
+          outputMode = "append", col("ts"), col("msg_id"))(
+        stream => changesFrom(stream.as[MqttMsg], snapshot).toDF())
+    }
+    val streamedKept = streamed.withColumn("ts", col("ts").cast("timestamp_ntz"))
+      .select(col("ts"), col("topic"), col("value"), col("msg_id"))
+    MqttQueries.finishHistory(headKept.unionByName(streamedKept), m)
   }
 }

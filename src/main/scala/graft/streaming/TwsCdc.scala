@@ -12,9 +12,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   * runs, since its state spills to disk and snapshots incrementally
   * instead of living on the executor heap like the HDFS-backed default).
   *
-  * The state machine itself is IDENTICAL to [[StatefulCdc.processTopic]]
-  * verbatim — per-topic last payload, deterministic (ts, msg_id) order
-  * inside each batch, content diff (/root/reference/mysql.sql:86-91) — so
+  * The state machine itself is the ONE fold [[CdcFold]] that the
+  * fmgws [[StatefulCdc]] and the bootstrap [[TwsBootstrapCdc]] processors
+  * also call — per-topic last payload, deterministic (ts, msg_id) order
+  * inside each batch, content diff (reference `mysql.sql:86-91`) — so
   * certifying this form against the SAME oracle proves the semantics
   * carry across both state APIs and both state store providers.
   */
@@ -37,29 +38,12 @@ object TwsCdc {
       last = getHandle.getValueState[Array[Byte]]("last", Encoders.BINARY, ttl)
 
     override def handleInputRows(topic: String, rows: Iterator[MqttMsg],
-        timers: TimerValues): Iterator[CdcEvent] =
-      foldTopic(last, topic, rows)
-  }
-
-  /** The CDC update step shared by every transformWithState form (plain,
-    * TTL'd, bootstrap): diff each message in deterministic (ts, msg_id)
-    * order against the stored previous payload, emit changes, store the
-    * batch's last payload.
-    */
-  private[streaming] def foldTopic(last: ValueState[Array[Byte]],
-      topic: String, rows: Iterator[MqttMsg]): Iterator[CdcEvent] = {
-    var prev: Option[Array[Byte]] = if (last.exists()) Some(last.get()) else None
-    val out = Vector.newBuilder[CdcEvent]
-    rows.toSeq.sortBy(m => (m.ts.getTime, m.msg_id)).foreach { m =>
-      val changed = prev match {
-        case None => true
-        case Some(p) => !java.util.Arrays.equals(p, m.value)
-      }
-      if (changed) out += CdcEvent(topic, m.ts, m.msg_id, m.value)
-      prev = Some(m.value)
+        timers: TimerValues): Iterator[CdcEvent] = {
+      val (next, out) =
+        CdcFold(if (last.exists()) Some(last.get()) else None, topic, rows)
+      next.foreach(last.update)
+      out.iterator
     }
-    prev.foreach(last.update)
-    out.result().iterator
   }
 
   /** The RocksDB provider `transformWithState` requires (set it on

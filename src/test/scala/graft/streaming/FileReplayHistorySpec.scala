@@ -40,8 +40,7 @@ class FileReplayHistorySpec extends SparkSpec {
     val work = Files.createTempDirectory("file_replay_restart").toFile
     try {
       val m = MqttQueries.replayMessages(spark, sf0001)
-      val staged = m.select(col("msg_id"), col("ts").cast("timestamp").as("ts"),
-        col("topic"), col("value"), col("qos"), col("retain"))
+      val staged = MqttMsg.staged(m)
       val stagingDir = new File(work, "staging").getAbsolutePath
       staged.repartitionByRange(3, col("ts"), col("msg_id"))
         .sortWithinPartitions(col("ts"), col("msg_id"))

@@ -35,17 +35,40 @@ class FileReplayTwinsSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
-  test("empty replay yields an empty session frame, not a crash") {
-    val work = java.nio.file.Files.createTempDirectory("sessions_empty").toFile
-    try {
-      graft.sources.Tables.events(spark, sf0001).limit(0)
-        .write.parquet(new java.io.File(work, "events.parquet").getAbsolutePath)
-      val got = FileReplaySessions.userSessions(spark, work.getAbsolutePath)
-      assert(got.collect().isEmpty)
-      assert(got.columns.toSeq ==
-        Seq("user_id", "session_start", "session_end", "n_events"))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(work)
+  /** Every flushed replay form over an empty `events.parquet`: it has no
+    * max event time to build a sentinel from, so it must stage none and
+    * return an empty frame with its batch twin's columns.
+    */
+  private def emptyReplay(form: String)(run: String => org.apache.spark.sql.DataFrame,
+      batch: String => org.apache.spark.sql.DataFrame): Unit =
+    test(s"empty replay yields an empty $form frame, not a crash") {
+      val work = java.nio.file.Files.createTempDirectory("replay_empty").toFile
+      try {
+        graft.sources.Tables.events(spark, sf0001).limit(0)
+          .write.parquet(new java.io.File(work, "events.parquet").getAbsolutePath)
+        val got = run(work.getAbsolutePath)
+        assert(got.collect().isEmpty)
+        assert(got.columns.toSeq == batch(sf0001).columns.toSeq)
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(work)
+    }
+
+  emptyReplay("session")(FileReplaySessions.userSessions(spark, _),
+    Relational.sessionWindows(spark, _))
+  emptyReplay("tws session")(TwsSessions.userSessionsFromFiles(spark, _),
+    Relational.sessionWindows(spark, _))
+  emptyReplay("windowed")(FileReplayWindowed.hourlyStats(spark, _),
+    graft.operators.MqttQueries.windowedCounts(spark, _))
+  /** The joins' batch twin is their oracle SQL, run by Spark over `events`. */
+  private def oracle(sql: String)(dir: String) = {
+    graft.sources.Tables.events(spark, dir).createOrReplaceTempView("events")
+    try spark.sql(sql) finally spark.catalog.dropTempView("events")
   }
+
+  emptyReplay("stream-stream join")(StreamStreamJoin.signupPurchases(spark, _),
+    oracle(StreamStreamJoin.signupPurchasesSql))
+  emptyReplay("outer stream-stream join")(
+    StreamStreamJoin.signupPurchasesOuter(spark, _),
+    oracle(StreamStreamJoin.signupPurchasesOuterSql))
 
   test("sessionization file twin on the RocksDB state store (the at-scale " +
       "provider) equals the default-provider result") {

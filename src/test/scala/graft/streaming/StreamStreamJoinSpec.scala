@@ -164,7 +164,8 @@ class StreamStreamJoinSpec extends SparkSpec {
             .filterNot(f => before.contains(f.getName))
             .foreach(_.setLastModified(1_000_000_000_000L + i * 60_000L))
         }
-      val got = StreamStreamJoin.joinStaged(spark, inDir, schema, "30 minutes")
+      val got = StreamStreamJoin.joinStaged(spark,
+          ReplayHarness.Staged(inDir, schema, flushed = false), "30 minutes")
         .select($"signup_event", $"purchase_event")
         .as[(Long, Long)].collect().toSet
       assert(got == Set((1L, 2L))) // cross-batch pair found; 30h pair excluded

@@ -21,10 +21,13 @@
 # catalog is the registry Verify, Bench, the plan tools and the benchmark
 # all read, and the spec checks its names are distinct and its views agree.
 #
+# And CdcFoldProperties (seconds, no Spark session): the fold is the CDC
+# semantics that three processors share.
+#
 # Usage: tools/gate.sh   (exits non-zero if a compile, a guard, the catalog
-#                         spec or a sink spec fails)
+#                         spec, the fold property or a sink spec fails)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch compile Test/compile \
-  "testOnly graft.streaming.SingleIngestSeamSpec graft.SingleSessionSpec graft.QuerySelectionSpec graft.streaming.UpsertSinkSpec graft.streaming.UpsertSinkProperties graft.streaming.UpsertSinkVersionsSpec"
-echo "[gate] compile + Test/compile + static guards + catalog + upsert sink specs green — safe to commit"
+  "testOnly graft.streaming.SingleIngestSeamSpec graft.SingleSessionSpec graft.QuerySelectionSpec graft.streaming.CdcFoldProperties graft.streaming.UpsertSinkSpec graft.streaming.UpsertSinkProperties graft.streaming.UpsertSinkVersionsSpec"
+echo "[gate] compile + Test/compile + static guards + catalog + CDC fold + upsert sink specs green — safe to commit"
